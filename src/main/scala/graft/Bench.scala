@@ -1,44 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The graph fixpoints (CC / PageRank / label-prop) materialize
-    // lazy localCheckpoints and release the previous round's cache
-    // without blocking, so a straggler task can report its metric
-    // accumulators after the owning SQLExecution already unregistered
-    // them. Spark logs that as "ERROR DAGScheduler: Failed to update
-    // accumulator ... non-existent accumulator" — verified benign
-    // here (round 7): the dropped update is metrics-only and all 150
-    // oracle rows match with the race present. Scoped to FATAL so the
-    // driver-captured bench tail ends with the JSON line, not a
-    // 20-deep stack trace. (AccumulatorContext emits the WARN twin.)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.FATAL)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.util.AccumulatorContext",
-      org.apache.logging.log4j.Level.ERROR)
-    // Every Window in the library is partitioned by a real key except
-    // eventPaths' share pass over its ≤ typesⁿ aggregated path matrix
-    // (audited round 7; Catalyst folds its constant partition key, so
-    // WindowExec warns as if a data-sized frame were collapsing) and
-    // unimaxAllocation's water-filling windows over the post-agg
-    // LANGUAGE grain (a handful of rows by definition, round 8).
-    // Those are single-partition BY DESIGN — scope the logger so
-    // the warning doesn't read as a scale bug in the bench tail.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSpark.session(cpus.toInt)
     // untimed warmup: a representative scan+agg PLUS one heavy
     // multi-stage query, so the first timed queries aren't charged
     // JVM/JIT/codegen/shuffle-service startup. Round 7's driver-run
@@ -61,136 +28,14 @@ object Bench {
     // didn't — benchOnly used to skip the segments unconditionally)
     val runElbo = benchOnly.forall(_.exists(n =>
       n.startsWith("elbo") || n.startsWith("rff")))
-    // minimum-slice ELBO training loop (BASELINE.md bench plan):
-    // variational Bayesian linear regression, minibatch SGD at sfDir
-    // scale; reported as iterations and wall-seconds. Measured BEFORE
-    // the query sweep: the 80+ query plans leave JIT/GC pressure that
-    // was costing the step-rate metric ~25% when it ran last. (The
-    // symmetric caveat: from this round on, the sweep runs in a JVM
-    // pre-warmed by the optimizer segments — per-query times compare
-    // cleanly to each other and to future rounds, but comparisons
-    // against rounds ≤ 3 carry that harness delta.)
-    // Round-10 bisect of the r8->r9 "regression" (580 -> 351 it/s
-    // local): `git diff c69be53 a8cfe7c -- src/main/scala/graft/
-    // {optimize,autodiff,core,data}` is EMPTY — no commit in the range
-    // touched the ELBO path — and four fresh runs of this segment on
-    // identical code measured 388/401/422/466 it/s. The quiesced
-    // artifacts sampled the two ends of that machine-noise band; there
-    // is no code regression to win back. The root cause of the noisy
-    // metric was segment length: 30 local iters last ~0.07 s, inside
-    // the scheduler-jitter band, so even best-of-3 swung ±20%. The
-    // LOCAL segments now time 300 iterations (~0.7 s — long enough to
-    // average the jitter out, reported as it/s so rates stay
-    // comparable across rounds); the distributed segments stay at 30
-    // (each step is a real Spark job; 30 already take ~10 s).
-    val elboIters = 30
-    val elboItersLocal = 300
-    var distSecs = -1.0
-    var distOneSecs = -1.0
-    var rffSecs = -1.0
-    var rffDistSecs = -1.0
-    val elboSecs = if (!runElbo) -1.0 else try {
-      import graft.autodiff.ExprFns
-      import graft.core._
-      import graft.data.DataSet
-      import graft.optimize.Elbo
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select(((col("l_quantity") - 25.5) / 14.4).as("x"),
-          ((col("l_extendedprice") / 10000.0 - 3.8) / 2.5).as("y"))
-      val root = new Module
-      val a = root.add("a", new Variational.Normal(Seq(1)))
-      val b = root.add("b", new Variational.Normal(Seq(1)))
-      val c = root.add("c", new Variational.Normal(Seq(1)))
-      val ds = new DataSet(li, seed = 0)
-      val elbo = new Elbo(root, ds, Seq("x", "y"), ctx => {
-        val fit = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
-        ExprFns.gaussian(ctx.in("y"), fit,
-          graft.autodiff.Expr.exp(ctx.sample1(c)))
-      }, seed = 0)
-      ds.trainCount // materialize split outside the timed region
-      // one untimed step: triggers the one-time input projection /
-      // collect and tape codegen, so the loop measures steady-state
-      // per-iteration throughput. A 30-iteration segment is only
-      // ~0.2-0.6 s, so single samples swing ±25% on scheduler jitter
-      // — each segment reports its best of 3 (the achievable
-      // steady-state rate, not one draw from the noise).
-      def best3(body: => Unit): Double =
-        (0 until 3).map { _ =>
-          val t = System.nanoTime(); body; (System.nanoTime() - t) / 1e9
-        }.min
-      elbo.optimize(maxiter = 1, minibatchSize = 65536, lr = 0.05)
-      val s = best3(
-        elbo.optimize(maxiter = elboItersLocal, minibatchSize = 65536,
-          lr = 0.05))
-
-      // same model FORCED onto the distributed treeAggregate path
-      // (localThreshold = 0) — the per-step rate a real cluster runs
-      // at. stepsPerBatch=5 fuses 5 Adam sub-steps per sampled
-      // minibatch, amortizing the ~50 ms/job scheduling floor.
-      val elboD = new Elbo(root, ds, Seq("x", "y"), ctx => {
-        val fit = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
-        ExprFns.gaussian(ctx.in("y"), fit,
-          graft.autodiff.Expr.exp(ctx.sample1(c)))
-      }, seed = 0, localThreshold = 0L)
-      elboD.optimize(maxiter = 1, minibatchSize = 65536, lr = 0.05)
-      distSecs = best3(
-        elboD.optimize(maxiter = elboIters, minibatchSize = 65536, lr = 0.05,
-          stepsPerBatch = 5))
-      // unfused rate kept for comparison (one job per step)
-      distOneSecs = best3(
-        elboD.optimize(maxiter = elboIters, minibatchSize = 65536, lr = 0.05))
-      // RFF-GP regression segment: the corpus-scale GP path — D=16
-      // codegen'd cos-feature columns feeding the same ELBO engine
-      // (16 weights vs the 3-param linear model above; the delta is
-      // the cost of the feature map + wider tape)
-      try {
-        val rffD = 16
-        val (w, bph) = graft.gp.Rff.frequencies(1, rffD,
-          breeze.linalg.DenseVector(1.0), seed = 13L)
-        val phis = graft.gp.RffGpr.featureCols(Seq(col("x")), w, bph)
-        val data = li.select(
-          phis.zipWithIndex.map { case (cc, j) => cc.as(s"phi$j") } :+
-            col("y").as("rff_y"): _*)
-        val root2 = new Module
-        (0 until rffD).foreach(j =>
-          root2.add(s"rw$j", new Variational.Normal(Seq(1))))
-        val vs = root2.variationals.toMap
-        val ds2 = new DataSet(data, seed = 0)
-        val elboR = new Elbo(root2, ds2,
-          (0 until rffD).map(j => s"phi$j") :+ "rff_y", ctx => {
-            val mean = (0 until rffD).foldLeft(graft.autodiff.Expr.c(0.0)) {
-              (acc, j) => acc + ctx.sample1(vs(s"rw$j")) * ctx.in(s"phi$j")
-            }
-            ExprFns.gaussian(ctx.in("rff_y"), mean,
-              graft.autodiff.Expr.c(0.25))
-          }, seed = 0)
-        ds2.trainCount
-        elboR.optimize(maxiter = 1, minibatchSize = 65536, lr = 0.05)
-        rffSecs = best3(elboR.optimize(maxiter = elboItersLocal,
-          minibatchSize = 65536, lr = 0.05))
-        // same RFF-GP model FORCED onto the distributed treeAggregate
-        // path (localThreshold = 0) — keeps the distributed RFF rate
-        // regression-gated after the 32M-cell local-threshold raise
-        // moved the segment above onto the driver-local fast path
-        // (mirrors elbo_dist vs elbo_train). Fused 5 sub-steps per
-        // sampled batch, like elbo_dist. Diagnostic: excluded from the
-        // headline total alongside elbo_dist_unfused.
-        val elboRD = new Elbo(root2, ds2,
-          (0 until rffD).map(j => s"phi$j") :+ "rff_y", ctx => {
-            val mean = (0 until rffD).foldLeft(graft.autodiff.Expr.c(0.0)) {
-              (acc, j) => acc + ctx.sample1(vs(s"rw$j")) * ctx.in(s"phi$j")
-            }
-            ExprFns.gaussian(ctx.in("rff_y"), mean,
-              graft.autodiff.Expr.c(0.25))
-          }, seed = 0, localThreshold = 0L)
-        elboRD.optimize(maxiter = 1, minibatchSize = 65536, lr = 0.05)
-        rffDistSecs = best3(elboRD.optimize(maxiter = elboIters,
-          minibatchSize = 65536, lr = 0.05, stepsPerBatch = 5))
-        ds2.unpersist()
-      } catch { case _: Throwable => () }
-      ds.unpersist(); s
-    } catch { case _: Throwable => -1.0 }
+    // a query or optimizer segment that throws lands here (name →
+    // exception class) and in no timing
+    val errors = mutable.LinkedHashMap.empty[String, String]
+    // the optimizer segments run BEFORE the query sweep: the 80+
+    // query plans leave JIT/GC pressure that was costing the
+    // step-rate metric ~25% when they ran last
+    val segs: Map[String, Double] =
+      if (runElbo) optimizerSegments(spark, sfDir, errors) else Map.empty
     // Per-query timing discipline (round 7):
     //  - a FAILED query must never masquerade as a fast one (round 5's
     //    bench silently timed DATATYPE_MISMATCH analysis errors at
@@ -203,7 +48,6 @@ object Bench {
     //    reports the MINIMUM, stopping early once the best two runs
     //    agree within 15% — the min is the least-contended estimate
     //    and the right statistic for regression gating.
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Contention guard (round-9 ask #1, de-ratcheted round 10):
     // min-of-3 alone doesn't protect a run whose EVERY attempt is
     // contended, and comparing against the LAST committed artifact
@@ -279,23 +123,16 @@ object Bench {
       name -> t
     }
     val timed = results.filterNot { case (k, _) => errors.contains(k) }
-    val allResults = timed ++ Map(
-      s"elbo_train_${elboItersLocal}it" -> elboSecs,
-      s"elbo_dist_${elboIters}it" -> distSecs,
-      s"elbo_dist_unfused_${elboIters}it" -> distOneSecs,
-      s"rff_gpr_${elboItersLocal}it" -> rffSecs,
-      s"rff_gpr_dist_${elboIters}it" -> rffDistSecs)
+    val allResults = timed ++ segs
     // the unfused-dist and forced-dist RFF rates are diagnostics, not
     // workload — keep the headline total comparable across rounds
-    val total = (allResults - s"elbo_dist_unfused_${elboIters}it"
-      - s"rff_gpr_dist_${elboIters}it")
+    val total = (allResults - s"elbo_dist_unfused_${ElboIters}it"
+      - s"rff_gpr_dist_${ElboIters}it")
       .values.filter(_ > 0).sum
     def fmt(v: Double): String = "%.3f".format(v)
-    val rates = s""""sf":"$sfDir","elbo_iters_per_sec":${fmt(
-      if (elboSecs > 0) elboItersLocal / elboSecs else -1.0)},"elbo_dist_iters_per_sec":${fmt(
-      if (distSecs > 0) elboIters / distSecs else -1.0)},"rff_gpr_iters_per_sec":${fmt(
-      if (rffSecs > 0) elboItersLocal / rffSecs else -1.0)},"rff_gpr_dist_iters_per_sec":${fmt(
-      if (rffDistSecs > 0) elboIters / rffDistSecs else -1.0)}"""
+    def rate(name: String, iters: Int): String =
+      fmt(segs.get(s"$name${iters}it").fold(-1.0)(iters / _))
+    val rates = s""""sf":"$sfDir","elbo_iters_per_sec":${rate("elbo_train_", ElboItersLocal)},"elbo_dist_iters_per_sec":${rate("elbo_dist_", ElboIters)},"rff_gpr_iters_per_sec":${rate("rff_gpr_", ElboItersLocal)},"rff_gpr_dist_iters_per_sec":${rate("rff_gpr_dist_", ElboIters)}"""
     // FULL per-query map → file (the driver captures only the last
     // ~2000 chars of stdout, so the printed line must stay small)
     val fullQs = allResults.toSeq.sortBy(_._1)
@@ -332,11 +169,9 @@ object Bench {
     // printed line: elbo segments + slowest queries, char-budgeted so
     // the whole JSON (plus sbt's [success] trailer) fits the driver's
     // 2000-char tail window and parses
-    val segs = allResults.toSeq.filter { case (k, _) =>
-      k.startsWith("elbo_") || k.startsWith("rff_") }
     val budget = 1300
     val slowest = timed.toSeq.sortBy(-_._2)
-    val picked = (segs ++ slowest).foldLeft(Vector.empty[String]) {
+    val picked = (segs.toSeq ++ slowest).foldLeft(Vector.empty[String]) {
       case (acc, (k, v)) =>
         val entry = "\"" + k + "\":" + fmt(v)
         if (acc.map(_.length + 1).sum + entry.length > budget) acc
@@ -344,5 +179,82 @@ object Bench {
     }
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${timed.size},"n_errors":${errors.size},"n_contended":${contended.size},$driftJson,"full":"BENCH_FULL.json","queries":${picked.mkString("{", ",", "}")},$rates}""")
     spark.stop()
+  }
+
+  // The LOCAL segments time 300 iterations (~0.7 s — long enough to
+  // average scheduler jitter out; 30 local iterations last ~0.07 s and
+  // swung ±20% even best-of-3), reported as it/s so rates stay
+  // comparable across rounds; the distributed segments stay at 30
+  // (each step is a real Spark job; 30 already take ~10 s).
+  private val ElboIters = 30
+  private val ElboItersLocal = 300
+
+  /** Time each named segment in order. A segment that throws lands in
+    * `errors` (name → exception class) and in no result, so a failure
+    * never reads as a timing. */
+  private[graft] def runSegments(segments: Seq[(String, () => Double)],
+                                 errors: mutable.Map[String, String])
+      : Seq[(String, Double)] =
+    segments.flatMap { case (name, body) =>
+      try Some(name -> body())
+      catch { case e: Throwable =>
+        errors(name) = e.getClass.getSimpleName
+        None
+      }
+    }
+
+  /** The five optimizer segments over lineitem at `sfDir`: the
+    * linear model local, forced distributed (fused 5 Adam sub-steps
+    * per sampled minibatch, amortizing the ~50 ms/job scheduling
+    * floor) and unfused, then the 16-feature RFF-GP model local and
+    * forced distributed. The unfused and forced-distributed RFF rates
+    * are diagnostics, excluded from the headline total. Each segment
+    * takes one untimed step first (the one-time input projection /
+    * collect and tape codegen) and reports its best of 3 — the
+    * achievable steady-state rate, not one draw from the noise. */
+  private def optimizerSegments(spark: SparkSession, sfDir: String,
+                                errors: mutable.Map[String, String])
+      : Map[String, Double] = {
+    import org.apache.spark.sql.functions.col
+    import graft.data.DataSet
+    val datasets = mutable.ArrayBuffer.empty[DataSet]
+    def dataSet(df: org.apache.spark.sql.DataFrame): DataSet = {
+      val ds = new DataSet(df, seed = 0)
+      datasets += ds
+      ds.trainCount // materialize the split outside the timed region
+      ds
+    }
+    lazy val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .select(((col("l_quantity") - 25.5) / 14.4).as("x"),
+        ((col("l_extendedprice") / 10000.0 - 3.8) / 2.5).as("y"))
+    lazy val lin = new Models.Linear
+    lazy val linData = dataSet(li)
+    lazy val linDist = lin.elbo(linData, localThreshold = 0L)
+    lazy val rff = new Models.RffGp
+    lazy val rffData = dataSet(rff.features(li))
+    def best3(body: => Unit): Double =
+      (0 until 3).map { _ =>
+        val t = System.nanoTime(); body; (System.nanoTime() - t) / 1e9
+      }.min
+    def warmBest3(e: graft.optimize.Elbo, iters: Int,
+                  stepsPerBatch: Int = 1): Double = {
+      e.optimize(maxiter = 1, minibatchSize = 65536, lr = 0.05)
+      best3(e.optimize(maxiter = iters, minibatchSize = 65536, lr = 0.05,
+        stepsPerBatch = stepsPerBatch))
+    }
+    try runSegments(Seq(
+      s"elbo_train_${ElboItersLocal}it" -> (() =>
+        warmBest3(lin.elbo(linData), ElboItersLocal)),
+      s"elbo_dist_${ElboIters}it" -> (() =>
+        warmBest3(linDist, ElboIters, stepsPerBatch = 5)),
+      s"elbo_dist_unfused_${ElboIters}it" -> (() =>
+        best3(linDist.optimize(maxiter = ElboIters, minibatchSize = 65536,
+          lr = 0.05))),
+      s"rff_gpr_${ElboItersLocal}it" -> (() =>
+        warmBest3(rff.elbo(rffData), ElboItersLocal)),
+      s"rff_gpr_dist_${ElboIters}it" -> (() =>
+        warmBest3(rff.elbo(rffData, localThreshold = 0L), ElboIters,
+          stepsPerBatch = 5))), errors).toMap
+    finally datasets.reverse.foreach(_.unpersist())
   }
 }

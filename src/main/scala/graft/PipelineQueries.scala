@@ -29,8 +29,8 @@ object PipelineQueries {
   /** SCALE-ADAPTIVE pin (r15, guide §1.2/§5): persist a multi-consumer
     * frame only when the source relation is big enough that re-running
     * its subtree per consumer costs more than the materialization
-    * barrier. Measured crossover on q_text_pmi (PmiAB, min-of-3
-    * alternating): at sf0.1 (0.6 MB docs) ReuseExchange reuse beats
+    * barrier. Measured crossover on q_text_pmi (min-of-3
+    * alternating, plans/r15/pmi_ab_100x.log): at sf0.1 (0.6 MB docs) ReuseExchange reuse beats
     * the pin 2.1 vs 2.7 s; at the 100× fixture (58 MB) the pin wins
     * 9.4 vs 11.9 s — runtime exchange reuse stops covering the count
     * tables once AQE re-plans the bigger subtrees. Threshold is
@@ -38,8 +38,8 @@ object PipelineQueries {
     * that keeps the sf0.1 bench regime unchanged; at warehouse scale
     * every corpus is far above it, which is the direction the 100×
     * measurement says is right. */
-  private val PinAboveBytes: Long = sys.env
-    .getOrElse("SPARK_GRAFT_PIN_ABOVE_BYTES", (32L << 20).toString).toLong
+  private lazy val PinAboveBytes: Long =
+    graft.ops.PlanHints.bytesFromEnv("SPARK_GRAFT_PIN_ABOVE_BYTES", 32L << 20)
   private def pinIfBig(src: DataFrame)(df: DataFrame): DataFrame =
     if (src.queryExecution.optimizedPlan.stats.sizeInBytes >
       BigInt(PinAboveBytes)) pin(df) else df
@@ -234,8 +234,8 @@ object PipelineQueries {
       "SELECT agg.*, os.* FROM agg CROSS JOIN os")
 
   /** Cluster-level MinHash dedup: stats over the doc → cluster map of
-    * [[Dedup.minhashClusters]] — transitive closure (alternating
-    * large-star/small-star connected components) of the capped
+    * [[Dedup.minhashClusters]] — transitive closure (union-find
+    * contraction connected components) of the capped
     * candidate graph at est ≥ 0.5 UNION exact-signature group edges.
     * The DuckDB side replays the identical edge set and closes it
     * with a recursive CTE, so the per-doc cluster labels (bound via
@@ -3243,7 +3243,7 @@ object PipelineQueries {
     * Resolution = deletion-1 neighborhood blocking (FastSS — 100%
     * recall at τ=1 by construction, bucket sizes O(match group)) ×
     * (nation, segment) equality prior → `levenshtein ≤ 1` verify on
-    * candidates only → large-star/small-star closure. The oracle
+    * candidates only → union-find contraction closure. The oracle
     * replays the typo formulas, the neighborhood explode, the same
     * verify, and a recursive min-label closure, so per-record entity
     * labels pin bit-for-bit (digest) — including any accidental
@@ -3304,33 +3304,41 @@ object PipelineQueries {
   private val entityCtes: String =
     entityCtesWith("levenshtein(ra.name, rb.name) <= 1")
 
+  /** The entity family's dirty-customer fixture (described at
+    * q_dedup_entity): every customer's clean record (rid 2k) and its
+    * dirty twin (rid 2k + 1), as (rid, name, nat, seg, key). */
+  private[graft] def dirtyCustomers(s: SparkSession, d: String): DataFrame = {
+    val base = s.read.parquet(s"$d/customer.parquet")
+      .select(col("c_custkey").as("k"), col("c_name"),
+        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
+        substring(col("c_name"), 10, 9).as("dg"),
+        (col("c_custkey") % 9).cast("int").as("p0"),
+        ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
+    def subAt(dgc: org.apache.spark.sql.Column,
+              p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      concat(dgc.substr(lit(1), p),
+        ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
+          .cast("string"),
+        dgc.substr(p + 2, lit(9)))
+    def delAt(dgc: org.apache.spark.sql.Column,
+              p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+      concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
+    val sub0 = subAt(col("dg"), col("p0"))
+    val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
+      .when(col("k") % 3 === 1, sub0)
+      .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
+      .otherwise(col("dg"))
+    base.select((col("k") * 2).as("rid"),
+        col("c_name").as("name"), col("nat"), col("seg"))
+      .unionByName(base.select((col("k") * 2 + 1).as("rid"),
+        concat(lit("Customer#"), dirtyDigits).as("name"),
+        col("nat"), col("seg")))
+      .withColumn("key", substring(col("name"), 10, 10))
+  }
+
   private val dedupEntity = Q("q_dedup_entity",
     (s, d) => {
-      val base = s.read.parquet(s"$d/customer.parquet")
-        .select(col("c_custkey").as("k"), col("c_name"),
-          col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
-          substring(col("c_name"), 10, 9).as("dg"),
-          (col("c_custkey") % 9).cast("int").as("p0"),
-          ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-      def subAt(dgc: org.apache.spark.sql.Column, p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column, p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
-      val clean = base.select((col("k") * 2).as("rid"),
-        col("c_name").as("name"), col("nat"), col("seg"))
-      val dirty = base.select((col("k") * 2 + 1).as("rid"),
-        concat(lit("Customer#"), dirtyDigits).as("name"),
-        col("nat"), col("seg"))
-      val rec = clean.unionByName(dirty)
-        .withColumn("key", substring(col("name"), 10, 10))
+      val rec = dirtyCustomers(s, d)
       val resolved = graft.ops.Entity.resolve(rec, "rid", "key",
         "name", Seq("nat", "seg"), tau = 1)
       val pe = resolved.groupBy(col("seg"), col("entity"))
@@ -3448,33 +3456,7 @@ object PipelineQueries {
     * same blocking + its own jaro_winkler_similarity + closure. */
   private val dedupEntityJw = Q("q_dedup_entity_jw",
     (s, d) => {
-      val base = s.read.parquet(s"$d/customer.parquet")
-        .select(col("c_custkey").as("k"), col("c_name"),
-          col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
-          substring(col("c_name"), 10, 9).as("dg"),
-          (col("c_custkey") % 9).cast("int").as("p0"),
-          ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-      def subAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
-      val clean = base.select((col("k") * 2).as("rid"),
-        col("c_name").as("name"), col("nat"), col("seg"))
-      val dirty = base.select((col("k") * 2 + 1).as("rid"),
-        concat(lit("Customer#"), dirtyDigits).as("name"),
-        col("nat"), col("seg"))
-      val rec = clean.unionByName(dirty)
-        .withColumn("key", substring(col("name"), 10, 10))
+      val rec = dirtyCustomers(s, d)
       // floor-quantize the score BEFORE thresholding (the
       // q_dedup_jarowinkler discipline): the accept decision then
       // depends on the 1e-6 quantum, not the last ulp of two
@@ -3703,32 +3685,7 @@ object PipelineQueries {
     * the recursion doesn't re-derive the candidate join per step. */
   private val dedupEntityTau2 = Q("q_dedup_entity_tau2",
     (s, d) => {
-      val base = s.read.parquet(s"$d/customer.parquet")
-        .select(col("c_custkey").as("k"), col("c_name"),
-          col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
-          substring(col("c_name"), 10, 9).as("dg"),
-          (col("c_custkey") % 9).cast("int").as("p0"),
-          ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-      def subAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
-      val rec = base.select((col("k") * 2).as("rid"),
-          col("c_name").as("name"), col("nat"), col("seg"))
-        .unionByName(base.select((col("k") * 2 + 1).as("rid"),
-          concat(lit("Customer#"), dirtyDigits).as("name"),
-          col("nat"), col("seg")))
-        .withColumn("key", substring(col("name"), 10, 10))
+      val rec = dirtyCustomers(s, d)
       // narrow (rid, seg, entity) persists: it feeds BOTH the
       // entity-size stats and the planted-pair recall aggregate —
       // unpersisted, the deletion-2 blocking + verify + closure
@@ -10331,7 +10288,7 @@ object PipelineQueries {
     * image bytes are built and hashed partition-local (never
     * shuffle); both edge families are (long, long) star edges to the
     * per-key min doc; the closure is the O(log n)
-    * large-star/small-star kernel; `n_bridged` pins that cross-modal
+    * union-find contraction kernel; `n_bridged` pins that cross-modal
     * chaining actually happened (clusters spanning ≥2 caption
     * blocks exist only via image edges). */
   private val multimodalPairDedup = Q("q_multimodal_pairdedup",

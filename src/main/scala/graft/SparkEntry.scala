@@ -7,27 +7,15 @@ object SparkEntry {
     * reference's Henbun_structure2 demo) on sf0.001 for a short budget
     * and return the posterior summary — one row per model parameter. */
   def entry(spark: SparkSession): DataFrame = {
-    import graft.autodiff.ExprFns
-    import graft.core._
-    import graft.data.DataSet
-    import graft.optimize.Elbo
     val li = spark.read
       .parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(((col("l_quantity") - 25.5) / 14.4).as("x"),
         ((col("l_extendedprice") / 10000.0 - 3.8) / 2.5).as("y"))
-    val root = new Module
-    val a = root.add("a", new Variational.Normal(Seq(1)))
-    val b = root.add("b", new Variational.Normal(Seq(1)))
-    val c = root.add("c", new Variational.Normal(Seq(1)))
-    val ds = new DataSet(li, seed = 0)
-    val elbo = new Elbo(root, ds, Seq("x", "y"), ctx => {
-      val fit = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
-      ExprFns.gaussian(ctx.in("y"), fit,
-        graft.autodiff.Expr.exp(ctx.sample1(c)))
-    }, seed = 0)
-    val last = elbo.optimize(maxiter = 60, lr = 0.1)
+    val model = new Models.Linear
+    val last = model.elbo(new graft.data.DataSet(li, seed = 0))
+      .optimize(maxiter = 60, lr = 0.1)
     import spark.implicits._
-    root.variationals.map { case (n, v) =>
+    model.root.variationals.map { case (n, v) =>
       (n, v.qMu.value(0), math.exp(v.qSqrt.value(0)), last)
     }.toDF("param", "post_mean", "post_scale", "elbo")
   }

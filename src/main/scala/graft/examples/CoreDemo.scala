@@ -3,7 +3,6 @@ package graft.examples
 import breeze.linalg.DenseVector
 import graft.core._
 import graft.functions.Transforms
-import org.apache.spark.sql.SparkSession
 
 /** Minimal driver-side walkthrough of the parameter/variational API:
   * build a module tree, sample a posterior, compare MC vs analytic KL,
@@ -11,9 +10,7 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.examples.CoreDemo"`. */
 object CoreDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(2)
 
     val root = new Module
     val w = root.add("w", new Variational.Normal(Seq(3)))

@@ -1,6 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.data.DataSet
 import org.apache.spark.sql.functions._
 
 /** Distributed-ELBO throughput probe: it/s of the forced-treeAggregate
@@ -10,31 +10,13 @@ import org.apache.spark.sql.functions._
 object DistProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.autodiff.ExprFns
-    import graft.core._
-    import graft.data.DataSet
-    import graft.optimize.Elbo
+    val spark = graft.LocalSpark.session(32)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(((col("l_quantity") - 25.5) / 14.4).as("x"),
         ((col("l_extendedprice") / 10000.0 - 3.8) / 2.5).as("y"))
-    val root = new Module
-    val a = root.add("a", new Variational.Normal(Seq(1)))
-    val b = root.add("b", new Variational.Normal(Seq(1)))
-    val c = root.add("c", new Variational.Normal(Seq(1)))
+    val model = new graft.Models.Linear
     val ds = new DataSet(li, seed = 0)
-    val elbo = new Elbo(root, ds, Seq("x", "y"), ctx => {
-      val fit = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
-      ExprFns.gaussian(ctx.in("y"), fit,
-        graft.autodiff.Expr.exp(ctx.sample1(c)))
-    }, seed = 0, localThreshold = 0L)
+    val elbo = model.elbo(ds, localThreshold = 0L)
     ds.trainCount
     elbo.optimize(maxiter = 2, minibatchSize = 65536, lr = 0.05) // warm
     for (spb <- Seq(1, 5, 15, 1, 5, 15)) {

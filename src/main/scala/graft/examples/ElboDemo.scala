@@ -1,10 +1,6 @@
 package graft.examples
 
-import graft.autodiff.ExprFns
-import graft.core._
 import graft.data.DataSet
-import graft.optimize.Elbo
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The minimum end-to-end slice (SURVEY §7 step 5): variational
@@ -16,24 +12,14 @@ object ElboDemo {
     val maxiter = args.headOption.map(_.toInt).getOrElse(1000)
     val mb = args.lift(1).map(_.toInt).getOrElse(2048)
     val lr = args.lift(2).map(_.toDouble).getOrElse(0.05)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(4)
 
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select((col("l_quantity") / 10.0).as("x"),
         (col("l_extendedprice") / 10000.0).as("y"))
-    val root = new Module
-    val a = root.add("a", new Variational.Normal(Seq(1)))
-    val b = root.add("b", new Variational.Normal(Seq(1)))
-    val cv = root.add("c", new Variational.Normal(Seq(1)))
+    val model = new graft.Models.Linear
     val ds = new DataSet(li, seed = 0)
-    val elbo = new Elbo(root, ds, Seq("x", "y"), ctx => {
-      val fit = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
-      ExprFns.gaussian(ctx.in("y"), fit,
-        graft.autodiff.Expr.exp(ctx.sample1(cv)))
-    }, seed = 0)
+    val elbo = model.elbo(ds)
 
     val t0 = System.nanoTime()
     elbo.optimize(maxiter, mb, lr, verboseEvery = math.max(1, maxiter / 20))
@@ -45,9 +31,9 @@ object ElboDemo {
     val slope = (mxy - mx * my) / (mxx - mx * mx)
     val inter = my - slope * mx
     println(f"[demo] $maxiter iters in $secs%.1f s (${maxiter / secs}%.1f it/s)")
-    println(f"[demo] a=${a.qMu.value(0)}%.4f (OLS $inter%.4f)  " +
-      f"b=${b.qMu.value(0)}%.4f (OLS $slope%.4f)  " +
-      f"noise=${math.exp(cv.qMu.value(0))}%.4f")
+    println(f"[demo] a=${model.a.qMu.value(0)}%.4f (OLS $inter%.4f)  " +
+      f"b=${model.b.qMu.value(0)}%.4f (OLS $slope%.4f)  " +
+      f"noise=${math.exp(model.c.qMu.value(0))}%.4f")
     println(f"[demo] test ELBO=${elbo.run(training = false)}%.2f")
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.examples
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSpark, SparkEntry}
 
 /** Prints formatted physical plans for representative queries — the
   * scale checklist: column-pruned scans (ReadSchema), pushed filters,
@@ -12,12 +11,7 @@ object ExplainDemo {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_dens_gaussian", "q_kern_rbf", "q_embed_top1",
         "q_dedup_minhash", "q_lse")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4)
     names.foreach { n =>
       println(s"\n================ $n ================")
       SparkEntry.queries(n)(spark, "/root/testdata/sf0.01")

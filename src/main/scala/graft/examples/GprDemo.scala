@@ -2,7 +2,6 @@ package graft.examples
 
 import graft.data.DataSet
 import graft.gp.GpExpr
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end sparse-GP regression demo: learn the lengthscale, the
@@ -17,12 +16,7 @@ object GprDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val learnZ = args.length > 1 && args(1).toBoolean
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(8)
 
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(((col("l_quantity") - 25.5) / 7.2).as("x"))

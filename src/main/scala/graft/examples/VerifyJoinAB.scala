@@ -1,73 +1,57 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.Entity
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-/** τ=2 verify-join strategy A/B at $SPARK_GRAFT_SF_DIR (r15, VERDICT
-  * item 6): times the verified-edge subplan (candidatePairsSplit2 +
-  * the two name joins) with the stock planner choice vs a
-  * shuffle_hash hint on the name side, alternating min-of-3, on a
-  * quiesced host — the r14 experiment read only ~6% inside a load-15
-  * regime. Also prints the name-side optimizedPlan stats, the input
-  * to any size-gated hint. */
+/** The τ=2 verify join of q_dedup_entity_tau2 at `$SPARK_GRAFT_SF_DIR`
+  * (default sf0.1): the verified-edge subplan (candidatePairsSplit2 +
+  * [[Entity.verifiedEdges]]) over the dirty-customer fixture. This
+  * stage runs eagerly inside the CC closure, so the registered
+  * queries' plan dumps never show it.
+  *
+  *  - default: times the subplan as `resolveWith` runs it (size-gated
+  *    `shuffle_hash` hint) against the stock planner choice (hints
+  *    disabled), alternating, min-of-3 each. Below the gate both arms
+  *    plan the same broadcast; above it the contest is SHJ vs SMJ.
+  *  - `plan <file>`: writes the subplan's formatted physical plan, as
+  *    `resolveWith` runs it, to `<file>`.
+  *
+  * Usage: `runMain graft.examples.VerifyJoinAB [plan <file>]` */
 object VerifyJoinAB {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val base = spark.read.parquet(s"$sfDir/customer.parquet")
-      .select(col("c_custkey").as("k"), col("c_name"),
-        col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"),
-        substring(col("c_name"), 10, 9).as("dg"),
-        (col("c_custkey") % 9).cast("int").as("p0"),
-        ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-    def subAt(dgc: org.apache.spark.sql.Column,
-              p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      concat(dgc.substr(lit(1), p),
-        ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10).cast("string"),
-        dgc.substr(p + 2, lit(9)))
-    def delAt(dgc: org.apache.spark.sql.Column,
-              p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-    val sub0 = subAt(col("dg"), col("p0"))
-    val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-      .when(col("k") % 3 === 1, sub0)
-      .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-      .otherwise(col("dg"))
-    val rec = base.select((col("k") * 2).as("rid"),
-        col("c_name").as("name"), col("nat"), col("seg"))
-      .unionByName(base.select((col("k") * 2 + 1).as("rid"),
-        concat(lit("Customer#"), dirtyDigits).as("name"),
-        col("nat"), col("seg")))
-      .withColumn("key", substring(col("name"), 10, 10))
-
-    val names = rec.select(col("rid"), col("name"))
-    println(s"names stats sizeInBytes = " +
-      s"${names.queryExecution.optimizedPlan.stats.sizeInBytes}")
-
-    def verified(nameSide: DataFrame): DataFrame = {
-      val cand = graft.ops.Entity.candidatePairsSplit2(
-        rec, "rid", "key", Seq("nat", "seg"))
-      cand
-        .join(nameSide.select(col("rid").as("id_a"),
-          col("name").as("__na")), "id_a")
-        .join(nameSide.select(col("rid").as("id_b"),
-          col("name").as("__nb")), "id_b")
-        .where(levenshtein(col("__na"), col("__nb")) <= 2)
-        .select("id_a", "id_b")
-    }
-    def run(tag: String, nameSide: DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      verified(nameSide).write.format("noop").mode("overwrite").save()
-      println(f"verify[$tag]: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    }
-    run("warmup", names)
-    for (_ <- 1 to 3) {
-      run("stock", names)
-      run("shj", names.hint("shuffle_hash"))
+    val spark = graft.LocalSpark.session(32)
+    val rec = graft.PipelineQueries.dirtyCustomers(spark, sfDir)
+    // the input to the size gate in Entity.verifiedEdges
+    val nameBytes = rec.select(col("rid"), col("name"))
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    println(s"names stats sizeInBytes = $nameBytes")
+    // built per use: hints resolve while the frame is analyzed, so the
+    // disableHints conf must be set before the frame exists
+    def verified() = Entity.verifiedEdges(
+      Entity.candidatePairsSplit2(rec, "rid", "key", Seq("nat", "seg")),
+      rec, "rid", "name", (a, b) => levenshtein(a, b) <= 2)
+    args.toSeq match {
+      case Seq("plan", file) =>
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(file),
+          verified().queryExecution.explainString(FormattedMode))
+        println(s"wrote $file")
+      case Seq() =>
+        def run(tag: String, hints: Boolean): Unit = {
+          spark.conf.set("spark.sql.optimizer.disableHints", !hints)
+          val t0 = System.nanoTime()
+          verified().write.format("noop").mode("overwrite").save()
+          println(f"verify[$tag]: ${(System.nanoTime() - t0) / 1e9}%.3f s")
+        }
+        run("warmup", hints = true)
+        for (_ <- 1 to 3) {
+          run("stock", hints = false)
+          run("gated", hints = true)
+        }
+      case _ =>
+        throw new IllegalArgumentException(
+          "usage: VerifyJoinAB [plan <file>]")
     }
     spark.stop()
   }

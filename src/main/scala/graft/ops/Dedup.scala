@@ -570,9 +570,9 @@ object Dedup {
     * (placement invariant: a (u, v) row sits exactly where key u sits
     * under p, so for downstream ops keyed by u this partitioner IS
     * p) — without it, `.map(_._1)` would drop the partitioner and
-    * [[smallStar]]'s reduce/join would re-exchange the whole edge set
-    * every round, adding a fourth full shuffle per round at exactly
-    * the scale the loop is designed for. The equality is pinned to
+    * the next [[contractRound]] would re-exchange its forward copies
+    * as well as the reversed ones, adding a full shuffle per round at
+    * exactly the scale the loop is designed for. The equality is pinned to
     * the one shared loop-partitioner INSTANCE (`other eq p`), never a
     * structural match. */
   private def distinctPairsByKey(r: org.apache.spark.rdd.RDD[(Long, Long)],
@@ -671,7 +671,7 @@ object Dedup {
     * edges through a union-by-min union-find (path-compressed) and
     * emits ONE (node, local-root) star edge per non-root node, in one
     * NARROW mapPartitions. Effects: every within-partition chain
-    * collapses before the first star round (round COUNT is unchanged
+    * collapses before the first keyed round (round COUNT is unchanged
     * on the τ=2 entity fixture — its chains are cross-partition; the
     * measured wins are the removed input-distinct shuffle and the
     * cheaper round-0 materialization), and the output is PER-PARTITION
@@ -691,7 +691,7 @@ object Dedup {
     *
     * Memory: the parent table holds one primitive entry per DISTINCT
     * node in the partition — the same order as the per-round
-    * reduceByKey combiner maps the star loop already builds. */
+    * reduceByKey combiner map of [[distinctPairsByKey]]. */
   private def localContract(e: org.apache.spark.rdd.RDD[(Long, Long)])
       : org.apache.spark.rdd.RDD[(Long, Long)] =
     e.mapPartitions { it =>
@@ -726,27 +726,27 @@ object Dedup {
     * §2.1/§2.4): symmetrize so every node's FULL current neighborhood
     * is co-located at its hash partition, fold each partition through
     * the same union-find as [[localContract]], emit (node, local-root)
-    * stars, exact-dedup. Replaces one largeStar+smallStar pair (3
-    * keyed shuffles) with 2: when the input already rides the loop
-    * partitioner (every round ≥ 2) only the REVERSED copies move — a
-    * partitioner-aware union keeps the forward copies in place — vs
-    * the star pair's full 2|E| sym exchange plus two dedups.
+    * stars, exact-dedup — 2 keyed shuffles per round: when the input
+    * already rides the loop partitioner (every round ≥ 2) only the
+    * REVERSED copies move — a partitioner-aware union keeps the
+    * forward copies in place.
     *
     * Correctness: a union only ever joins the two endpoints of a real
     * current edge, so connectivity is preserved exactly; output is
     * canonically oriented (root = local min < node) and per-partition
     * distinct, with the keyed dedup making it globally exact for the
-    * convergence signature. Per round it performs a SUPERSET of both
-    * stars' unions at each node's home partition (largeStar: every
-    * neighbor joins min(N(u) ∪ u); smallStar: smaller neighbors join
-    * the min — both are unions among {u} ∪ N(u), all co-located here)
-    * plus any transitive chaining the partition happens to hold.
+    * convergence signature. Per round it performs a SUPERSET of the
+    * Kiveris et al. star steps' unions at each node's home partition
+    * (large-star: every neighbor joins min(N(u) ∪ u); small-star:
+    * smaller neighbors join the min — both are unions among
+    * {u} ∪ N(u), all co-located here) plus any transitive chaining
+    * the partition happens to hold.
     * Fixpoint: a star forest reproduces itself exactly (the root's
     * partition sees all children and re-emits them; a child's
     * partition sees only its root), and any chain or multi-parent
     * node strictly contracts (its home partition unions the whole
     * neighborhood to one root), so signature equality detects exactly
-    * the star-forest fixpoint, as for the star rounds. */
+    * the star-forest fixpoint. */
   private def contractRound(e: org.apache.spark.rdd.RDD[(Long, Long)],
                             p: org.apache.spark.Partitioner)
       : org.apache.spark.rdd.RDD[(Long, Long)] = {
@@ -763,91 +763,43 @@ object Dedup {
     distinctPairsByKey(localContract(sym), p)
   }
 
-  /** Large-star round: connect every node to the minimum of its
-    * (symmetrized) neighborhood ∪ itself, keeping only edges to
-    * strictly larger neighbors. After the one symmetrize shuffle,
-    * the per-node min (`reduceByKey` — map-side combine, the
-    * hash-aggregate shape) and the join back are NARROW (both sides
-    * ride the shared partitioner); the final exact dedup is one more
-    * keyed shuffle + partition-local set. Input must be canonically
-    * oriented (u > v); output is too (the emitted (v, m) always has
-    * m ≤ u < v). */
-  private def largeStar(e: org.apache.spark.rdd.RDD[(Long, Long)],
-                        p: org.apache.spark.Partitioner)
-      : org.apache.spark.rdd.RDD[(Long, Long)] = {
-    val sym = e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
-      .partitionBy(p)
-    val mins = sym.reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
-      .mapPartitions(_.map { case (u, mn) => (u, math.min(mn, u)) },
-        preservesPartitioning = true)
-    distinctPairsByKey(
-      sym.filter { case (u, v) => v > u }
-        .join(mins, p)
-        .map { case (_, (v, m)) => (v, m) },
-      p)
-  }
-
-  /** Small-star round: connect each node's smaller neighbors (and
-    * itself) to the neighborhood minimum. Input must be canonically
-    * oriented (u > v) — every edge set in the loop is, so the orient
-    * pass of the textbook formulation is a no-op and is skipped; the
-    * input arrives already partitioned by u from [[largeStar]], so
-    * the reduce and join are narrow and only the final dedup
-    * shuffles. Output is canonically oriented. */
-  private def smallStar(e: org.apache.spark.rdd.RDD[(Long, Long)],
-                        p: org.apache.spark.Partitioner)
-      : org.apache.spark.rdd.RDD[(Long, Long)] = {
-    val o = if (e.partitioner.contains(p)) e else e.partitionBy(p)
-    val mins = o.reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
-    distinctPairsByKey(
-      o.join(mins, p)
-        .flatMap { case (_, (v, m)) =>
-          if (v != m) Iterator((v, m)) else Iterator.empty }
-        .union(mins),
-      p)
-  }
-
   /** Connected components of the undirected graph given as an edge
-    * list, via alternating large-star / small-star contraction
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC 2014) — the transitive-closure step cluster-level dedup
-    * needs: near-dup pairs chain (A~B, B~C with A,C never colliding)
-    * and the whole chain must collapse into ONE cluster, which
-    * per-pair or per-signature grouping cannot express.
+    * list, via union-find contraction rounds — the transitive-closure
+    * step cluster-level dedup needs: near-dup pairs chain (A~B, B~C
+    * with A,C never colliding) and the whole chain must collapse into
+    * ONE cluster, which per-pair or per-signature grouping cannot
+    * express.
     *
-    * Scale shape: each round is two (map-side-combined `reduceByKey`
-    * + co-partitioned same-key join-back) pairs — shuffles carry only
-    * (long, long) pairs — and the edge set contracts toward the star
-    * forest; convergence is O(log n) rounds even on path graphs,
-    * where plain min-label propagation needs O(diameter).
+    * Scale shape: round 0 is [[localContract]], a narrow
+    * partition-local union-find over the canonical input; every later
+    * round is one [[contractRound]] (symmetrize to each node's home
+    * partition, partition-local union-find, keyed exact dedup — two
+    * shuffles of (long, long) pairs). Each round performs every union
+    * a large-star and a small-star step would (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC 2014), so
+    * the edge set contracts toward the star forest in O(log n) rounds
+    * even on path graphs, where plain min-label propagation needs
+    * O(diameter).
     *
     * The LOOP runs on RDDs, not DataFrames, deliberately (the GraphX
     * / GraphFrames precedent): a fixed iterative kernel re-planned by
     * Catalyst every round pays optimizer + codegen time per round at
     * ANY data size, and a lineage cut discards the shuffle layout so
     * every round re-exchanges. The RDD form plans once per round in
-    * microseconds, and one shared HashPartitioner keeps `sym`, the
-    * per-node min, and the join co-partitioned across the whole
-    * fixpoint. Per-round state is persisted (memory-and-disk) and the
-    * previous round unpersisted; the convergence probe — an
-    * (edge-count, hash-xor) treeAggregate — is the one action per
-    * round and also materializes it. The DataFrame API is unchanged.
+    * microseconds, and one shared HashPartitioner keeps each round's
+    * output where the next round's forward copies must sit. Per-round
+    * state is persisted (memory-and-disk) and the previous round
+    * unpersisted; the convergence probe — an (edge-count, hash-xor)
+    * treeAggregate — is the one action per round and also
+    * materializes it.
     *
     * Returns (node, component) for every node appearing in an edge,
     * with component = the minimum node id of its component. Node ids
     * must be integral (cast to long). Isolated nodes never enter the
     * edge list and are absent — callers re-add singletons (see
     * [[minhashClusters]]). */
-  /** [[connectedComponents]] with per-round stderr timing — probe
-    * mains only (examples/CcRounds); the query paths use the quiet
-    * form. */
-  def ccInstrumented(edges: DataFrame, aCol: String, bCol: String,
-                     maxIter: Int = 50): DataFrame =
-    connectedComponents(edges, aCol, bCol, maxIter, verbose = true)
-
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 50,
-                          verbose: Boolean = false): DataFrame = {
+                          maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // fail fast on non-integral ids: cast("long") of a string/uuid id
@@ -867,7 +819,7 @@ object Dedup {
     // LSH candidate generation) runs exactly once, into a persisted
     // pair RDD the loop iterates on. Round 0 is [[localContract]]
     // (r14 optimization round): a NARROW partition-local union-find
-    // that collapses within-partition chains before the first star
+    // that collapses within-partition chains before the first keyed
     // round AND emits a per-partition pair-distinct canonical edge
     // set — so the input-dedup shuffle the non-distinct callers used
     // to pay here is gone entirely. (The r14 `edgesDistinct` hint was
@@ -884,26 +836,16 @@ object Dedup {
       math.max(canon.getNumPartitions, 1))
     var e = canon.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var sig = edgeSignature(e) // materializes the canonical input
-    if (verbose) System.err.println(s"[cc] round 0 (contract): edges ${sig._1}")
     var done = sig._1 == 0L
     var it = 0
     var toRelease = List.empty[org.apache.spark.rdd.RDD[_]]
-    // A/B switch for the r15 round-body experiment: -Dgraft.cc.loop=star
-    // restores the large-star/small-star pair (3 keyed shuffles/round)
-    // in place of the union-find contraction round (2).
-    val starLoop = sys.props.get("graft.cc.loop").contains("star")
     while (!done && it < maxIter) {
-      val tR = System.nanoTime()
-      val next = (if (starLoop) smallStar(largeStar(e, p), p)
-                  else contractRound(e, p))
+      val next = contractRound(e, p)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nextSig = edgeSignature(next) // materializes this round
-      if (verbose) System.err.println(
-        f"[cc] round ${it + 1}: ${(System.nanoTime() - tR) / 1e9}%.3f s, " +
-          s"edges ${nextSig._1}")
       // the previous round's edge set is now dead (released lazily,
-      // after `next` is safely materialized; the intra-round sym/o
-      // frames are never persisted — they flow straight through)
+      // after `next` is safely materialized; the intra-round sym
+      // frame is never persisted — it flows straight through)
       toRelease.foreach(_.unpersist(blocking = false))
       toRelease = List(e)
       done = nextSig == sig

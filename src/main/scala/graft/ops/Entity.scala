@@ -25,18 +25,18 @@ import org.apache.spark.sql.functions._
   * columns, neighborhood key), DISTINCT pair dedup, then the
   * verify join touches only candidate pairs (codegen'd
   * `levenshtein` on the two names). The transitive closure is
-  * [[Dedup.connectedComponents]] (alternating large-star/small-star
-  * on 8-byte id pairs). Full names never ride the blocking shuffle —
+  * [[Dedup.connectedComponents]] (union-find contraction rounds on
+  * 8-byte id pairs). Full names never ride the blocking shuffle —
   * only neighborhood keys do. */
 object Entity {
 
   /** Size gate for the scale-adaptive verify-join hint in
-    * [[resolveWith]]: name-side relations whose optimizedPlan stats
+    * [[verifiedEdges]]: name-side relations whose optimizedPlan stats
     * exceed this get a shuffle_hash hint (see the note at the join).
     * Env-parameterised with a local default ABOVE the auto-broadcast
     * ceiling, so bench-scale plans are untouched. */
-  private val ShjAboveBytes: Long = sys.env
-    .getOrElse("SPARK_GRAFT_SHJ_ABOVE_BYTES", (16L << 20).toString).toLong
+  private lazy val ShjAboveBytes: Long =
+    PlanHints.bytesFromEnv("SPARK_GRAFT_SHJ_ABOVE_BYTES", 16L << 20)
 
   /** The deletion-≤k neighborhood of `key` as an array column
     * (k ∈ {1, 2}): the key itself, every single-character deletion
@@ -229,39 +229,48 @@ object Entity {
     val cand =
       if (blockK == 2) candidatePairsSplit2(df, idCol, keyCol, blockCols)
       else candidatePairs(df, idCol, keyCol, blockCols, blockK)
-    val names0 = df.select(col(idCol), col(nameCol))
-    // SCALE-ADAPTIVE verify-join strategy (r15, guide §3.1): below the
-    // gate the planner broadcasts the name side (the right call — and
-    // what a forced hint would destroy, the r14 rejection); above it
-    // the contest is SMJ vs SHJ on the O(pairs) side, and a quiesced
-    // 100× A/B (VerifyJoinAB, committed log) reads SHJ consistently
-    // ~5% faster (58.4/60.5/64.1 vs 61.6/62.5/70.7 s min-of-3
-    // alternating) — the hash build keys on the UNIQUE record id, so
-    // the hot-key SHJ degradation of the blocking joins cannot occur,
-    // and the pairs side skips both SMJ sorts. Default gate 16 MB
-    // (above the 10 MB auto-broadcast ceiling, under the 100×
-    // fixture's 24.8 MB name stats), env-parameterised.
-    val names =
-      if (names0.queryExecution.optimizedPlan.stats.sizeInBytes >
-        BigInt(ShjAboveBytes)) names0.hint("shuffle_hash")
-      else names0
-    val verified = cand
-      .join(names.select(col(idCol).as("id_a"),
-        col(nameCol).as("__na")), "id_a")
-      .join(names.select(col(idCol).as("id_b"),
-        col(nameCol).as("__nb")), "id_b")
-      .where(verify(col("__na"), col("__nb")))
-      .select("id_a", "id_b")
     // verified is pair-distinct by construction (candidatePairs*
     // DISTINCT → many-to-one name joins → filter); the closure's
-    // round-0 contraction needs no dedup shuffle either way (the r14
-    // edgesDistinct hint was retired in r15 as a dead parameter)
+    // round-0 contraction needs no dedup shuffle either way
+    val verified = verifiedEdges(cand, df, idCol, nameCol, verify)
     val comp = Dedup.connectedComponents(verified, "id_a", "id_b")
     df.join(comp.select(col("node").as(idCol), col("component")),
         Seq(idCol), "left")
       .withColumn("entity",
         coalesce(col("component"), col(idCol).cast("long")))
       .drop("component")
+  }
+
+  /** The verify stage of [[resolveWith]]: the candidate pairs
+    * (id_a, id_b) whose two names — `nameCol` of the `idCol` rows of
+    * `names` — pass `verify`. */
+  def verifiedEdges(cand: DataFrame, names: DataFrame, idCol: String,
+                    nameCol: String,
+                    verify: (Column, Column) => Column): DataFrame = {
+    val names0 = names.select(col(idCol), col(nameCol))
+    // SCALE-ADAPTIVE verify-join strategy (r15, guide §3.1): below the
+    // gate the planner broadcasts the name side (the right call — and
+    // what a forced hint would destroy, the r14 rejection); above it
+    // the contest is SMJ vs SHJ on the O(pairs) side, and a quiesced
+    // 100× A/B (VerifyJoinAB; its plans are in plans/r15, its timing
+    // log is not committed) reads SHJ consistently
+    // ~5% faster (58.4/60.5/64.1 vs 61.6/62.5/70.7 s min-of-3
+    // alternating) — the hash build keys on the UNIQUE record id, so
+    // the hot-key SHJ degradation of the blocking joins cannot occur,
+    // and the pairs side skips both SMJ sorts. Default gate 16 MB
+    // (above the 10 MB auto-broadcast ceiling, under the 100×
+    // fixture's 24.8 MB name stats), env-parameterised.
+    val side =
+      if (names0.queryExecution.optimizedPlan.stats.sizeInBytes >
+        BigInt(ShjAboveBytes)) names0.hint("shuffle_hash")
+      else names0
+    cand
+      .join(side.select(col(idCol).as("id_a"),
+        col(nameCol).as("__na")), "id_a")
+      .join(side.select(col(idCol).as("id_b"),
+        col(nameCol).as("__nb")), "id_b")
+      .where(verify(col("__na"), col("__nb")))
+      .select("id_a", "id_b")
   }
 
   /** Deletion-neighborhood index of a RESOLVED archive — build (and

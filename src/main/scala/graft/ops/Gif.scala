@@ -39,12 +39,16 @@ object Gif {
     * MJPEG/AVI decoders. */
   def readFrames(b: Array[Byte],
                  maxFrames: Int): Option[(Int, IndexedSeq[BufferedImage])] = {
+    // the full 6-byte signature, GIF87a or GIF89a: the cached reader
+    // below skips the registry sniff, and the JDK GIF reader throws on
+    // any other version where a sniff would have answered "not a GIF"
     if (b == null || b.length < 6 ||
-      b(0) != 'G' || b(1) != 'I' || b(2) != 'F') return None
+      b(0) != 'G' || b(1) != 'I' || b(2) != 'F' || b(3) != '8' ||
+      (b(4) != '7' && b(4) != '9') || b(5) != 'a') return None
     val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(b))
     try {
       // per-thread cached GIF reader (r15, same rationale as
-      // [[Codecs.cachedReader]]): the magic bytes are already verified
+      // [[Codecs.cachedReader]]): the signature is already verified
       // above, so the registry sniff the stock path ran per clip is
       // redundant; reset (not dispose) restores construction state
       val r = Codecs.cachedReader("gif")

@@ -23,6 +23,18 @@ import org.apache.spark.sql.types.DataType
   * inferred filter never materializes. */
 object PlanHints {
 
+  /** A byte-size threshold for a size-gated plan choice: the value of
+    * the environment variable `name`, or `default` when it is unset.
+    * A value that is not a non-negative whole number fails with an
+    * [[IllegalArgumentException]] that names the variable. */
+  def bytesFromEnv(name: String, default: Long,
+                   env: Map[String, String] = sys.env): Long =
+    env.get(name).fold(default) { v =>
+      v.toLongOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a non-negative byte count, got '$v'"))
+    }
+
   /** Mark `c` non-nullable. ONLY valid immediately downstream of an
     * explicit `c.isNotNull` filter (KnownNotNull is a pass-through
     * with no runtime check — a null slipping past the contract would

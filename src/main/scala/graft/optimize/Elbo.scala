@@ -47,7 +47,7 @@ final class Elbo(
       * pushed a 600k-row × 17-column RFF-GP onto the distributed
       * path, paying the ~70 ms/step job floor (≈14 it/s) for data
       * that fits the driver 50× over. */
-    localThreshold: Long = 32000000L) extends Serializable {
+    localThreshold: Long = Elbo.LocalThresholdCells) extends Serializable {
 
   // ---- slot layout: full flat θ over sortedParams (deterministic order)
   private val paramSeq: Seq[(String, Param)] = module.sortedParams
@@ -584,6 +584,9 @@ final class Elbo(
 }
 
 object Elbo {
+
+  /** Default `localThreshold`: 32M cells (256 MB of doubles). */
+  val LocalThresholdCells: Long = 32000000L
 
   /** Max minibatch doubles (rows × input cols ≈ 32 MB) collected to
     * the driver for fused multi-step groups; larger batches stay a

@@ -163,11 +163,7 @@ object GenScale {
     // synthesize 15000×custMult rows so the entity-resolution
     // probes measure a fixture that actually grows
     val custMult = if (args.length > 3) args(3).toInt else 0
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session(32)
     new java.io.File(outDir).mkdirs()
     // embeddings grow x4 per decade in the driver's own sf steps
     // (500 -> 2000 for a 10x row step), so mult=10 -> x4, 100 -> x16

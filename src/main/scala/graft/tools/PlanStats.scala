@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-line plan-shape stats for EVERY registered query: parquet scan
   * count, Exchange count, join strategy counts — the optimization
   * round's triage table (a query whose plan scans the same input many
@@ -11,12 +9,7 @@ object PlanStats {
   def main(args: Array[String]): Unit = {
     val tag = if (args.nonEmpty) args(0) else "r14"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(4)
     val sb = new StringBuilder
     sb.append("query\tscans\texchanges\tbhj\tsmj\tshj\tbnl\twindows\n")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

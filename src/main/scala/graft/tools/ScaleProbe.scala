@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-point scaling probe (round-7 judge ask #1): times the heaviest
   * SparkEntry queries at sf0.1 and at the GenScale-synthesized 10×
   * dataset, and writes SCALING_r7.json with per-query times and the
@@ -223,15 +221,7 @@ object ScaleProbe {
       args(5).split(',').map(_.trim).filter(_.nonEmpty)
         .map(_ -> reason).toMap
     } else Map.empty
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.FATAL)
+    val spark = graft.LocalSpark.session(32)
     // warm JIT/codegen once
     try graft.SparkEntry.queries("q_dens_gaussian")(spark, sfSmall).count()
     catch { case _: Throwable => () }

@@ -27,4 +27,14 @@ class OracleSanitySpec extends AnyFunSuite {
       s"mismatch: ${((SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet) ++
         (SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet)).toSeq.sorted}")
   }
+
+  test("query names are unique across the three families, so the " +
+    "registry merge drops none") {
+    val families = Seq(OracleQueries.all, PipelineQueries.all, EventQueries.all)
+    val dups = families.flatten.groupBy(_.name).collect {
+      case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted}")
+    assert(SparkEntry.queries.size == families.map(_.size).sum)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
 }

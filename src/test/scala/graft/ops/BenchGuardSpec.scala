@@ -9,6 +9,17 @@ import graft.tools.BenchCompare
   * best+2*MAD per-query flags. Pure logic — no SparkSession. */
 class BenchGuardSpec extends AnyFunSuite {
 
+  test("an optimizer segment that throws lands in errors with its " +
+    "exception class, and in no timing") {
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val got = graft.Bench.runSegments(Seq(
+      "elbo_train_300it" -> (() => 0.5),
+      "rff_gpr_300it" -> (() => throw new IllegalStateException("boom")),
+      "rff_gpr_dist_30it" -> (() => 1.5)), errors)
+    assert(got == Seq("elbo_train_300it" -> 0.5, "rff_gpr_dist_30it" -> 1.5))
+    assert(errors == Map("rff_gpr_300it" -> "IllegalStateException"))
+  }
+
   test("parseQueryTimes extracts q_ keys only") {
     val txt = """{"value":93.7,"queries":{"q_a":1.500,"q_b":0.250,
       "elbo_train_30it":0.086,"rff_gpr_30it":0.120},"q_c":2.000}"""

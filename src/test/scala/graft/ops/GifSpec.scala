@@ -50,4 +50,14 @@ class GifSpec extends AnyFunSuite {
     assert((fs(0).getRGB(5, 5) & 0xff) == 60)
     assert((fs(1).getRGB(5, 5) & 0xff) == 200)
   }
+
+  test("readFrames checks the whole GIF87a/GIF89a signature: a GIFxx " +
+    "payload is None, not a decoder throw") {
+    val b = Gif.encodeAnimated(8, 8, Seq(gray(8, 8, 30)))
+    assert(Gif.readFrames(b, 10).isDefined)
+    val bad = b.clone()
+    bad(3) = 'x'; bad(4) = 'x'
+    assert(Gif.readFrames(bad, 10).isEmpty)
+    assert(Gif.readFrames("GIFxxxx".getBytes("US-ASCII"), 10).isEmpty)
+  }
 }

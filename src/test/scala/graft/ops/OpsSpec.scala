@@ -1473,12 +1473,11 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("connectedComponents localContract round 0: duplicate edges, " +
-    "cross-partition chains, sentinel-extreme ids and both loop " +
-    "bodies (contraction vs star rounds) all land on the union-find " +
-    "oracle") {
+    "cross-partition chains and sentinel-extreme ids land on the " +
+    "union-find oracle") {
     // chain spread one-edge-per-partition (repartition(16) on 15
     // edges): the partition-local union-find sees NO local structure
-    // and must leave all collapsing to the star rounds
+    // and must leave all collapsing to the keyed contraction rounds
     val chain = (0L until 15L).map(i => (i, i + 1L))
     // heavy duplication (every edge 7×, both orientations) with NO
     // upstream distinct — the contraction is the only dedup left
@@ -1496,16 +1495,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got == expect, s"diff: ${(got.toSet diff expect.toSet).take(5)} " +
       s"/ ${(expect.toSet diff got.toSet).take(5)}")
     assert(got(31L) == Long.MinValue) // min-id root through the sentinel
-    // the r15 A/B switch: the star-round loop body must produce the
-    // identical component map (the contraction round is the default;
-    // -Dgraft.cc.loop=star is the probe-only alternative)
-    sys.props("graft.cc.loop") = "star"
-    try {
-      val got2 = Dedup.connectedComponents(
-          edges.toDF("a", "b").repartition(16), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got2 == expect)
-    } finally sys.props.remove("graft.cc.loop")
   }
 
   test("minhashClusters collapses transitive near-dup chains that " +
