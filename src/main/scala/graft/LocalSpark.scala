@@ -7,10 +7,10 @@ import org.apache.spark.sql.SparkSession
 /** The local-mode session every main (Bench, Verify, tools, examples)
   * and the test suites run on: one place for the config they share. */
 object LocalSpark {
-  def session(cores: Int, appName: String = "graft"): SparkSession = {
+  def session(cores: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
-      .appName(appName)
+      .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // events.parquet ships TIMESTAMP(MICROS) (Events.load normalizes

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{LocalSpark, SparkEntry}
 import graft.core.CacheRegistry
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** One probe main for looking at registered queries, in three modes:
@@ -14,38 +15,55 @@ import org.apache.spark.sql.execution.FormattedMode
   *    (the form committed under `plans/`).
   *  - `audit`: runs each query so AQE settles its plan, then prints the
   *    recompute amplification ([[PlanAudit.amplified]]) and the
-  *    executed plan's codegen stages, exchanges, join strategies and
-  *    scan read schemas (column pruning).
+  *    executed plan's codegen stages, its [[PlanStats.shape]] counts
+  *    (scans, exchanges, join strategies, windows) and scan read
+  *    schemas (column pruning).
   *
   * Queries are a comma list of registered names, or `all`. The data
   * dir is `$SPARK_GRAFT_SF_DIR` (default sf0.1) and the core count
   * `$SPARK_GRAFT_CPUS` (default 32), as for `graft.Bench`. With a log
   * file, every printed line is also written there.
   *
-  * Usage: `runMain graft.tools.Probe <time|explain|audit> <q_a,q_b|all>
-  * [N = 3] [log-file]` */
+  * Usage: `runMain graft.tools.Probe time <q_a,q_b|all> [N = 3] [log-file]`
+  * or `runMain graft.tools.Probe <explain|audit> <q_a,q_b|all> [log-file]` */
 object Probe {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: Probe <time|explain|audit> <q_a,q_b|all> [N] [log-file]")
+    val usage = "usage: Probe time <q_a,q_b|all> [N] [log-file] | " +
+      "Probe <explain|audit> <q_a,q_b|all> [log-file]"
+    require(args.length >= 2, usage)
     val mode = args(0)
-    require(Set("time", "explain", "audit").contains(mode),
-      s"unknown mode '$mode' (time, explain or audit)")
+    // N is read only in time mode, so explain/audit take the log file third
+    val (rounds, logPath) = mode match {
+      case "time" =>
+        require(args.length <= 4, usage)
+        (args.lift(2).fold(3)(_.toInt), args.lift(3))
+      case "explain" | "audit" =>
+        require(args.length <= 3, usage)
+        (0, args.lift(2))
+      case _ => throw new IllegalArgumentException(
+        s"unknown mode '$mode' (time, explain or audit); $usage")
+    }
     val names =
       if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val rounds = args.lift(2).fold(3)(_.toInt)
-    val log = args.lift(3).map(p => new java.io.PrintWriter(p, "UTF-8"))
+    val log = logPath.map(p => new java.io.PrintWriter(p, "UTF-8"))
     def out(line: String): Unit = { println(line); log.foreach(_.println(line)) }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = LocalSpark.session(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    try {
+      val spark = LocalSpark.session(
+        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      try run(spark, sfDir, mode, names, rounds, out) finally spark.stop()
+    } finally log.foreach(_.close())
+  }
+
+  private def run(spark: SparkSession, sfDir: String, mode: String,
+      names: Seq[String], rounds: Int, out: String => Unit): Unit = {
     val queries = SparkEntry.queries
     def each(name: String)(body: => Unit): Unit =
       try body
       catch { case e: Throwable => out(s"== $name: ERROR $e") }
       finally CacheRegistry.drain()
-    try mode match {
+    mode match {
       case "time" =>
         queries("q_dens_gaussian")(spark, sfDir).count() // untimed warmup
         val times = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -74,20 +92,15 @@ object Probe {
           val df = queries(q)(spark, sfDir)
           df.collect() // let AQE finalize the executed plan
           val plan = df.queryExecution.executedPlan.toString
-          val joins = Seq("BroadcastHashJoin", "SortMergeJoin",
-            "ShuffledHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct")
-            .map(j => j -> j.r.findAllIn(plan).size).filter(_._2 > 0)
           // AQE's simple string renders codegen stages as "*(n) Op"
           val wsc = "\\*\\(\\d+\\)".r.findAllIn(plan).toSet.size
-          val exchanges = "Exchange".r.findAllIn(plan).size
-          out(s"== $q: wsc=$wsc exchanges=$exchanges joins=$joins " +
+          val shape = PlanStats.shape(plan).filter(_._2 > 0)
+            .map { case (col, n) => s"$col=$n" }.mkString(" ")
+          out(s"== $q: wsc=$wsc $shape " +
             s"amplified=${PlanAudit.amplified(df)}")
           "ReadSchema: struct<([^>]*)>".r.findAllMatchIn(plan)
             .foreach(m => out(s"   scan: ${m.group(1)}"))
         })
-    } finally {
-      log.foreach(_.close())
-      spark.stop()
     }
   }
 }
