@@ -5791,7 +5791,7 @@ object PipelineQueries {
     (s, d) => {
       val d0 = docs(s, d)
       val merges = graft.ops.Bpe.learn(d0, "text", BpeRounds)
-        .map(m => (m._2, m._3))
+        .map(m => (m.a, m.b))
       val words = d0.select(col("source"),
           explode(split(col("text"), " ")).as("tok"))
         .where(col("tok") =!= "" &&
@@ -5882,9 +5882,10 @@ object PipelineQueries {
     * family beside BPE and unigram-LM): merges scored by the
     * likelihood ratio count(ab)/(count(a)·count(b)) instead of the
     * raw pair count. Same rounds-over-vocabulary scale shape as
-    * [[graft.ops.Bpe]] (the corpus is touched once; each round is a
-    * symbol aggregate + a pair aggregate + a two-key model-sized
-    * join + a one-row driver argmax). Counts are exact integers; the
+    * [[graft.ops.Bpe]] (the corpus is touched once; each round is one
+    * narrow Spark job over the cached word table — symbol and pair
+    * counts per partition, the ratio argmax on the driver,
+    * [[graft.ops.MergeRounds]]). Counts are exact integers; the
     * score is ONE IEEE division of exact ints — identical on both
     * engines; ties break (a, b) under binary collation. */
   private val textWordPiece = Q("q_text_wordpiece",
@@ -8455,7 +8456,7 @@ object PipelineQueries {
     (s, d) => {
       val d0 = docs(s, d)
       val merges = graft.ops.Bpe.learn(d0, "text", BpeRounds)
-        .map(m => (m._2, m._3))
+        .map(m => (m.a, m.b))
       // fused one-pass piece-count kernel; the composable
       // filter/aggregate/segment form is its executable spec (BpeSpec)
       val np = graft.ops.TextHashExpressions
@@ -10586,7 +10587,7 @@ object PipelineQueries {
     (s, d) => {
       val d0 = docs(s, d)
       val merges = graft.ops.Bpe.learn(d0, "text", BpeRounds)
-        .map(m => (m._2, m._3))
+        .map(m => (m.a, m.b))
       val half = merges.take(BpeRounds / 2)
       val words = d0.select(col("source"),
           explode(split(col("text"), " ")).as("tok"))

@@ -11,11 +11,11 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: the corpus is touched ONCE (word-frequency
   * aggregate, map-side partial, vocabulary-sized output ≪ corpus);
-  * every merge round then runs over the VOCABULARY table — one
-  * explode + hash aggregate + driver argmax (one row) + one
-  * codegen'd string-replace map per round, the same rounds-of-
-  * aggregates shape as Lloyd's k-means. Nothing data-sized ever
-  * reaches the driver.
+  * every merge round is then one narrow Spark job over the cached
+  * word table ([[MergeRounds]]: re-apply the merges so far, count
+  * pairs per partition, take the argmax on the driver) — the same
+  * rounds-of-aggregates shape as Lloyd's k-means. Nothing data-sized
+  * ever reaches the driver.
   *
   * Cross-engine determinism: symbol sequences are 0x1F-delimited
   * strings and a merge is TWO passes of plain leftmost
@@ -50,25 +50,16 @@ object Bpe {
     * Pattern.split, limit −1) — removed so the sequence ends in ONE
     * delimiter, the exact shape this doc and the DuckDB oracle's
     * `chr(31) || array_to_string(string_split(tok, ''), chr(31)) ||
-    * chr(31)` produce (pairs()/segment() strip empties anyway, but a
-    * direct seq-string comparison must not silently differ). */
+    * chr(31)` produce ([[MergeRounds]] and segment() strip empties
+    * anyway, but a direct seq-string comparison must not silently
+    * differ). */
   def initSeq(tok: Column): Column =
     concat(lit(Delim),
       array_join(array_remove(split(tok, ""), ""), Delim), lit(Delim))
 
-  /** Adjacent symbol pairs of a delimited sequence, exploded. */
-  private def pairs(seqCol: Column): Column = {
-    // split leaves one empty string per edge delimiter; interior
-    // symbols are never empty, so dropping empties == the old
-    // trim-then-split without the deprecated two-arg trim
-    val syms = array_remove(split(seqCol, Delim), "")
-    explode(when(size(syms) < 2, array().cast("array<struct<a:string,b:string>>"))
-      .otherwise(transform(sequence(lit(1), size(syms) - 1),
-        i => struct(element_at(syms, i).as("a"),
-          element_at(syms, i + 1).as("b")))))
-  }
-
-  /** One merge application: two replace passes (see object doc). */
+  /** One merge application as a Column: the two replace passes of
+    * [[MergeRounds.applyMerge]], which learning uses, so [[segment]]
+    * replays exactly the merges the rounds counted. */
   def applyMerge(seqCol: Column, a: String, b: String): Column = {
     val pat = lit(Delim + a + Delim + b + Delim)
     val rep = lit(Delim + a + b + Delim)
@@ -76,51 +67,21 @@ object Bpe {
     call_function("replace", once, pat, rep)
   }
 
-  /** Learn `k` merges from a corpus: returns (round, a, b, merged,
-    * pair_count) — one row per round, most-frequent first. The merge
-    * table is model-sized by construction (k rows); the per-round
-    * argmax is the only driver round-trip. Rounds where no pair
-    * remains stop early. */
-  def learn(df: DataFrame, textCol: String, k: Int): Seq[(Int, String, String, String, Long)] = {
-    require(k >= 1 && k <= 64, s"bad merge count $k")
-    // cache ONLY the base word table (the corpus-sized work); each
-    // round's pair count re-evaluates the accumulated replace chain
-    // over the cached vocab — r codegen'd string replaces over a
-    // vocab-sized table beat a cache-materialization action per round
-    val base = wordTable(df, textCol)
-      .withColumn("seq", initSeq(col("tok"))).select("freq", "seq")
-      .cache()
-    var seqDf = base
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, String, Long)]
-    var round = 1
-    var done = false
-    try while (round <= k && !done) {
-      val top = seqDf.select(col("freq"), pairs(col("seq")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("c"))
-        .orderBy(col("c").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val Row(a: String, b: String, c: Long) = top.head
-        merges += ((round, a, b, a + b, c))
-        seqDf = seqDf.withColumn("seq", applyMerge(col("seq"), a, b))
-        round += 1
-      }
-    }
-    // finally: a failing round must not leak the cached vocab table
-    // for the session lifetime
-    finally base.unpersist()
-    merges.toSeq
+  /** Learn `k` merges from a corpus ([[MergeRounds]] with the raw
+    * pair count as the score): one merge per round, most-frequent
+    * first. The merge table is model-sized by construction (≤ k
+    * rows). Rounds where no pair remains stop early. */
+  def learn(df: DataFrame, textCol: String, k: Int): Seq[MergeRounds.Merge] = {
+    val words = wordTable(df, textCol)
+      .select(initSeq(col("tok")).as("seq"), col("freq"))
+    MergeRounds.learn(words, k, _ + _, (c, _, _) => c.toDouble)._1
   }
 
   /** [[learn]] as a DataFrame (the oracle-query surface). */
   def learnDf(df: DataFrame, textCol: String, k: Int): DataFrame = {
     val spark = df.sparkSession
-    val rows = learn(df, textCol, k).map {
-      case (r, a, b, m, c) => Row(r, a, b, m, c)
-    }
+    val rows = learn(df, textCol, k).map(m =>
+      Row(m.round, m.a, m.b, m.merged, m.pairCount))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),
       StructType(Seq(

@@ -22,11 +22,11 @@ import org.apache.spark.sql.types._
   * word-initial, so b always carries the mark.
   *
   * Scale shape — the [[Bpe]] discipline exactly: the corpus is
-  * touched ONCE (word-frequency aggregate); every merge round runs
-  * over the VOCABULARY table (one pair aggregate + one symbol
-  * aggregate + a two-key join for the ratio + a one-row driver
-  * argmax + one codegen'd string-replace map), and the apply side is
-  * a pure per-row map (stream-safe).
+  * touched ONCE (word-frequency aggregate); every merge round is one
+  * narrow Spark job over the cached word table ([[MergeRounds]]:
+  * re-apply the merges so far, count symbols and pairs per partition,
+  * take the ratio argmax on the driver), and the apply side is a pure
+  * per-row map (stream-safe).
   *
   * Cross-engine determinism: pair and symbol counts are exact
   * integers; the score is ONE IEEE division, CAST(c AS DOUBLE) /
@@ -67,88 +67,29 @@ object WordPiece {
       lit(Bpe.Delim))
   }
 
-  /** Symbols of a delimited sequence, as an array. */
-  private def syms(seqCol: Column): Column =
-    array_remove(split(seqCol, Bpe.Delim), "")
+  /** The symbol a merge of (a, b) makes: a + stripMark(b), keeping
+    * a's position class (b is never word-initial, so it always
+    * carries the mark). */
+  def merged(a: String, b: String): String = a + b.substring(1)
 
-  /** Adjacent symbol pairs, exploded (the [[Bpe]] shape). */
-  private def pairs(seqCol: Column): Column = {
-    val s = syms(seqCol)
-    explode(when(size(s) < 2,
-        array().cast("array<struct<a:string,b:string>>"))
-      .otherwise(transform(sequence(lit(1), size(s) - 1),
-        i => struct(element_at(s, i).as("a"),
-          element_at(s, i + 1).as("b")))))
-  }
-
-  /** One merge application: two replace passes (the [[Bpe.applyMerge]]
-    * semantics), with the merged symbol a + stripMark(b). */
-  def applyMerge(seqCol: Column, a: String, b: String): Column = {
-    val pat = lit(Bpe.Delim + a + Bpe.Delim + b + Bpe.Delim)
-    val rep = lit(Bpe.Delim + a + b.substring(1) + Bpe.Delim)
-    val once = call_function("replace", seqCol, pat, rep)
-    call_function("replace", once, pat, rep)
-  }
-
-  /** One learned merge: raw (marked) symbols + exact counts. The
-    * score is derived, never stored — both engines recompute the
-    * same division from (pairCount, cntA, cntB). */
-  final case class Merge(round: Int, a: String, b: String,
-                         merged: String, pairCount: Long,
-                         cntA: Long, cntB: Long)
-
-  /** Learn `k` likelihood-scored merges. Per round: symbol counts
-    * and pair counts over the (cached, vocab-sized) word table, the
-    * ratio argmax as ONE driver row, then the codegen'd replace.
-    * Rounds with no remaining pair stop early. */
-  def learn(df: DataFrame, textCol: String, k: Int): Seq[Merge] =
+  /** Learn `k` likelihood-scored merges ([[MergeRounds]] with the
+    * ratio score). Rounds with no remaining pair stop early. */
+  def learn(df: DataFrame, textCol: String, k: Int): Seq[MergeRounds.Merge] =
     learnWithVocab(df, textCol, k)._1
 
-  /** [[learn]] plus the MaxMatch vocabulary hashes, from ONE cached
-    * word table (the alphabet collects reuse the same corpus pass the
-    * rounds run over — calling [[learn]] and [[vocabHashes]]
-    * separately would scan the corpus twice). */
+  /** [[learn]] plus the MaxMatch vocabulary hashes. The vocabulary is
+    * the round-1 symbol inventory (every word-initial character and
+    * every marked interior character — the alphabet) plus the merged
+    * symbols, so it comes out of the same rounds at no extra pass. */
   def learnWithVocab(df: DataFrame, textCol: String, k: Int,
-                     mod: Long = DigestMod): (Seq[Merge], Map[String, Long]) = {
-    require(k >= 1 && k <= 64, s"bad merge count $k")
-    val base = wordTable(df, textCol)
-      .withColumn("seq", initSeq(col("tok"))).select("tok", "freq", "seq")
-      .cache()
-    var seqDf = base
-    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var round = 1
-    var done = false
-    try while (round <= k && !done) {
-      val sym = seqDf.select(col("freq"), explode(syms(col("seq"))).as("s"))
-        .groupBy("s").agg(sum(col("freq")).as("sc"))
-      val top = seqDf.select(col("freq"), pairs(col("seq")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("c"))
-        .join(sym.select(col("s").as("a"), col("sc").as("ca")), "a")
-        .join(sym.select(col("s").as("b"), col("sc").as("cb")), "b")
-        .orderBy((col("c").cast("double") /
-            (col("ca") * col("cb")).cast("double")).desc,
-          col("a").asc, col("b").asc)
-        .select("a", "b", "c", "ca", "cb")
-        .limit(1).collect()
-      if (top.isEmpty) done = true
-      else {
-        val Row(a: String, b: String, c: Long, ca: Long, cb: Long) =
-          top.head
-        merges += Merge(round, a, b, a + b.substring(1), c, ca, cb)
-        seqDf = seqDf.withColumn("seq", applyMerge(col("seq"), a, b))
-        round += 1
-      }
-    } catch { case t: Throwable => base.unpersist(); throw t }
-    val first = base.select(substring(col("tok"), 1, 1).as("s"))
-      .distinct().collect().map(_.getString(0))
-    val interior = base
-      .select(explode(slice(array_remove(split(col("tok"), ""), ""),
-        2, 1000000)).as("c"))
-      .distinct().collect().map(r => Mark + r.getString(0))
-    base.unpersist()
-    val all = (first ++ interior ++ merges.map(_.merged)).distinct
-    (merges.toSeq,
+                     mod: Long = DigestMod): (Seq[MergeRounds.Merge], Map[String, Long]) = {
+    val words = wordTable(df, textCol)
+      .select(initSeq(col("tok")).as("seq"), col("freq"))
+    // ANSI overflow of ca·cb throws, as Spark's multiply does
+    val (merges, alphabet) = MergeRounds.learn(words, k, merged,
+      (c, ca, cb) => c.toDouble / Math.multiplyExact(ca, cb).toDouble)
+    val all = alphabet ++ merges.map(_.merged)
+    (merges,
       all.map(s => s -> math.floorMod(TextHashFns.tokenHash60(s), mod)).toMap)
   }
 

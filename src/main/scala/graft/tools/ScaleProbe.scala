@@ -118,9 +118,10 @@ object ScaleProbe {
     // round-11: footer-only metadata (cost scales with FILE count,
     // not data volume — the honest expectation is far sub-linear)
     "q_source_parquetmeta" -> 10,
-    // round-12b: WordPiece learn (rounds over the vocabulary — the
-    // q_text_bpe far-sub-linear expectation) and MaxMatch apply
-    // (pure map over occurrences — docs-linear)
+    // round-12b: WordPiece learn (one corpus aggregate, then one
+    // narrow job per merge round over the word table — far
+    // sub-linear, like q_text_bpe) and MaxMatch apply (pure map over
+    // occurrences — docs-linear)
     "q_text_wordpiece" -> 10, "q_text_wordpiece_apply" -> 10,
     // round-12b: Hilbert layout (events-linear map + bounded cell
     // walk; the cell grid is FIXED-size, so far sub-linear past the

@@ -23,17 +23,49 @@ class BpeSpec extends AnyFunSuite {
     // hand-derived: pair counts over {low:7, lower:3, newest:6, widest:4}
     // round1: (l,o)=10, (o,w)=10, (e,s)=10, (s,t)=10, (w,e)=3+6, ...
     //   tie at 10 -> (e,s) lexicographically smallest
-    assert(merges(0)._2 == "e" && merges(0)._3 == "s" &&
-      merges(0)._5 == 10L, s"round1: ${merges(0)}")
+    assert(merges(0).a == "e" && merges(0).b == "s" &&
+      merges(0).pairCount == 10L, s"round1: ${merges(0)}")
     // round2: (es,t)=10, (l,o)=10, (o,w)=10 -> (es,t) beats (l,o)?
     //   'es' > 'l' lexicographically... binary: 'e'(101) < 'l'(108),
     //   so (es,t) wins
-    assert(merges(1)._2 == "es" && merges(1)._3 == "t" &&
-      merges(1)._5 == 10L, s"round2: ${merges(1)}")
+    assert(merges(1).a == "es" && merges(1).b == "t" &&
+      merges(1).pairCount == 10L, s"round2: ${merges(1)}")
     // round3: (l,o)=10 wins; round4: (lo,w)=10
-    assert(merges(2)._2 == "l" && merges(2)._3 == "o", s"round3: ${merges(2)}")
-    assert(merges(3)._2 == "lo" && merges(3)._3 == "w" &&
-      merges(3)._5 == 10L, s"round4: ${merges(3)}")
+    assert(merges(2).a == "l" && merges(2).b == "o", s"round3: ${merges(2)}")
+    assert(merges(3).a == "lo" && merges(3).b == "w" &&
+      merges(3).pairCount == 10L, s"round4: ${merges(3)}")
+  }
+
+  test("learn matches a plain JVM reference learner on a tie-heavy " +
+    "corpus, ties broken in UTF-8 (not UTF-16) order") {
+    val texts = TieCorpus.texts
+    val merges = Bpe.learn(TieCorpus.docs(spark), "text", 12)
+    val (ref, _) = RefMergeLearner.learn(texts, 12, wordPiece = false)
+    assert(merges.map(m => (m.a, m.b, m.merged, m.pairCount,
+      m.cntA, m.cntB)) == ref)
+    assert(merges.map(_.round) == (1 to merges.length))
+    TieCorpus.assertUtf8First(merges.map(_.a))
+  }
+
+  test("the learn kernel's string merge == the Column applyMerge " +
+    "segment uses, on repeated-symbol runs") {
+    val D = Bpe.Delim
+    val seqs = Seq("aaaa", "aaaaa", "aaaaaaa", "abab", "xaaay")
+      .map(w => w.map(c => s"$c").mkString(D, D, D))
+    val chain = Seq(("a", "a"), ("aa", "aa"), ("aa", "a"))
+    def kernel(seq: String) = chain.scanLeft(seq) { case (s, (a, b)) =>
+      MergeRounds.applyMerge(s, a, b, a + b) }
+    val got = seqs.toDF("s").select(col("s") +: chain.indices.map { i =>
+        chain.take(i + 1).foldLeft(col("s")) { case (c, (a, b)) =>
+          Bpe.applyMerge(c, a, b) }.as(s"m$i")
+      }: _*).collect()
+    got.foreach { r =>
+      val want = kernel(r.getString(0)).tail
+      assert((1 to chain.length).map(r.getString) == want,
+        s"seq <${r.getString(0)}>")
+    }
+    // the documented deviation: a run of five merges alternately
+    assert(kernel(seqs(1))(1) == s"${D}aa${D}a${D}aa$D")
   }
 
   test("segment applies the merge list in order; unknown words fall " +
@@ -56,7 +88,7 @@ class BpeSpec extends AnyFunSuite {
   test("fused piece-count kernel == composable segment fold on a real " +
     "corpus with learned merges (incl. empty and delimiter words)") {
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val merges = Bpe.learn(d, "text", 6).map(m => (m._2, m._3))
+    val merges = Bpe.learn(d, "text", 6).map(m => (m.a, m.b))
     assert(merges.nonEmpty)
     // executable spec: the per-word segment fold the kernel replaces
     val words = filter(split(col("text"), " "),

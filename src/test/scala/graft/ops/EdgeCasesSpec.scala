@@ -98,6 +98,7 @@ class EdgeCasesSpec extends AnyFunSuite {
     assert(Dsir.importanceWeights(noDocs, "text",
       Array.fill(Dsir.NumBuckets)(0.0)).count() == 0)
     assert(Bpe.learn(noDocs, "text", 3).isEmpty)
+    assert(WordPiece.learnWithVocab(noDocs, "text", 3) == ((Nil, Map.empty)))
     assert(QualityClassifier.withFeatures(noDocs, "text").count() == 0)
   }
 

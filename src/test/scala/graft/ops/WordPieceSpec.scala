@@ -45,17 +45,13 @@ class WordPieceSpec extends AnyFunSuite {
 
   test("applyMerge preserves the left symbol's position class and " +
     "strips the right mark") {
-    val s = spark
-    import s.implicits._
     val D = Bpe.Delim
     val seq = s"${D}a$D${MK}b$D${MK}c$D"
-    val got = Seq(seq).toDF("s")
-      .select(WordPiece.applyMerge(col("s"), MK + "b", MK + "c").as("r"))
-      .head().getString(0)
+    def merge(a: String, b: String) =
+      MergeRounds.applyMerge(seq, a, b, WordPiece.merged(a, b))
+    val got = merge(MK + "b", MK + "c")
     assert(got == s"${D}a$D${MK}bc$D", s"got <$got>")
-    val got2 = Seq(seq).toDF("s")
-      .select(WordPiece.applyMerge(col("s"), "a", MK + "b").as("r"))
-      .head().getString(0)
+    val got2 = merge("a", MK + "b")
     assert(got2 == s"${D}ab$D${MK}c$D", s"got <$got2>")
   }
 
@@ -151,6 +147,53 @@ class WordPieceSpec extends AnyFunSuite {
         s"token <${r.getString(0)}>: kernel ${r.getStruct(1)} vs " +
           s"spec ${r.getStruct(2)}")
     }
+  }
+
+  test("learn matches a plain JVM reference learner on a tie-heavy " +
+    "corpus, ties broken in UTF-8 (not UTF-16) order") {
+    val (merges, vocab) =
+      WordPiece.learnWithVocab(TieCorpus.docs(spark), "text", 12)
+    val (ref, alphabet) =
+      RefMergeLearner.learn(TieCorpus.texts, 12, wordPiece = true)
+    assert(merges.map(m => (m.a, m.b, m.merged, m.pairCount,
+      m.cntA, m.cntB)) == ref)
+    assert(merges.map(_.round) == (1 to merges.length))
+    assert(vocab.keySet == alphabet ++ ref.map(_._3))
+    TieCorpus.assertUtf8First(merges.map(_.a))
+  }
+
+  test("learn runs one Spark job per merge round (k = 6 on the sf0.01 " +
+    "documents launches at most k + 2 jobs)") {
+    val sc = spark.sparkContext
+    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    // job ids grow in submission order and the bus delivers events in
+    // order, so the jobs between two marker jobs are the learner's
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        ids.add((e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("wp-jobs-start")
+      val (merges, _) = WordPiece.learnWithVocab(docs, "text", 6)
+      marker("wp-jobs-end")
+      assert(merges.length == 6)
+      val deadline = System.nanoTime() + 30e9.toLong
+      def seen(name: String) =
+        ids.toArray(Array.empty[(Int, String)]).find(_._2 == name)
+      while (seen("wp-jobs-end").isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val (lo, hi) = (seen("wp-jobs-start").get._1, seen("wp-jobs-end").get._1)
+      assert(hi - lo - 1 <= 6 + 2, s"${hi - lo - 1} jobs for 6 rounds")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("learn early-stops when no pair remains") {
