@@ -4,8 +4,8 @@ import scala.collection.mutable
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = LocalSpark.session(cpus.toInt)
+    val spark = LocalSpark.session(
+      graft.ops.PlanHints.countFromEnv("SPARK_GRAFT_CPUS", 32))
     // untimed warmup: a representative scan+agg PLUS one heavy
     // multi-stage query, so the first timed queries aren't charged
     // JVM/JIT/codegen/shuffle-service startup. Round 7's driver-run

@@ -246,10 +246,9 @@ object EventQueries {
   /** One day in nanos — the tumbling-window width. */
   private val DayNanos = 86400000000000L
 
-  /** Tumbling-window per-type aggregates (the batch twin of the
-    * streaming windowed agg): per event_type, window counts / totals /
-    * the peak window, and a day-index checksum that pins every
-    * event's bucket assignment. Exact int64 window math on both
+  /** Tumbling-window per-type aggregates: per event_type, window
+    * counts / totals / the peak window, and a day-index checksum that
+    * pins every event's bucket assignment. Exact int64 window math on both
     * engines; the per-window grain is ONE hash aggregate, no window
     * function. */
   private val eventsWindow = Q("q_events_window",

@@ -2301,7 +2301,7 @@ object PipelineQueries {
       val archive = d0.where(draw < 0.8)
       val batch = d0.where(draw >= 0.8)
       val asn = Dedup.assignToClusters(batch, archive, "text", "doc_id",
-        MinhashCap, cache = pin)
+        MinhashCap)
       asn.agg(count(lit(1)).as("n_new"),
         sum(when(col("adopted"), 1L).otherwise(0L)).as("n_adopted"),
         countDistinct(when(col("adopted"), col("cluster_id")))
@@ -2532,7 +2532,7 @@ object PipelineQueries {
     * split points are salted hash draws on the doc id (deterministic,
     * replayable, independent of every other sampler's draws). Docs
     * under 4 tokens pass through untransformed. Pure per-row map —
-    * no shuffle, stream-safe; the transformed-text checksum pins the
+    * no shuffle; the transformed-text checksum pins the
     * exact token layout of every emitted doc cross-engine. */
   private val packFim = Q("q_pack_fim",
     (s, d) => {
@@ -2597,7 +2597,7 @@ object PipelineQueries {
     * prefixed span contents in block order. One span per full block
     * keeps spans non-overlapping and fully in range BY CONSTRUCTION
     * (no cross-engine slice-edge cases); the trailing partial block
-    * is never corrupted. Pure per-row map, stream-safe; input and
+    * is never corrupted. Pure per-row map; input and
     * target checksums pin both emitted strings exactly. */
   private val ScB = 20
   private val ScL = 3
@@ -2684,7 +2684,7 @@ object PipelineQueries {
     * markers, and the doc closes with `<|eos|>`. The loss mask counts
     * assistant-turn tokens only (the spans a trainer backpropagates
     * through). Docs under 4 tokens render as a single unmasked user
-    * turn. Pure per-row map — no shuffle, stream-safe; the rendered-
+    * turn. Pure per-row map — no shuffle; the rendered-
     * text checksum pins the exact byte layout of every conversation
     * cross-engine, and masked_toks pins the mask geometry. */
   private val packChat = Q("q_pack_chat",
@@ -3304,6 +3304,30 @@ object PipelineQueries {
   private val entityCtes: String =
     entityCtesWith("levenshtein(ra.name, rb.name) <= 1")
 
+  /** Digit `p` (0-based) of the digit string `dg`, bumped by one mod
+    * 10 — the entity fixtures' substitution typo. */
+  private def subAt(dg: org.apache.spark.sql.Column,
+      p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    concat(dg.substr(lit(1), p),
+      ((dg.substr(p + 1, lit(1)).cast("int") + 1) % 10).cast("string"),
+      dg.substr(p + 2, lit(9)))
+
+  /** `dg` with digit `p` (0-based) deleted — the deletion typo. */
+  private def delAt(dg: org.apache.spark.sql.Column,
+      p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    concat(dg.substr(lit(1), p), dg.substr(p + 2, lit(9)))
+
+  /** The dirty twin's name digits over the fixture columns (k, dg,
+    * p0, p1): two substitutions when k % 7 = 0, else one substitution
+    * (k % 3 = 1), one deletion (k % 3 = 2) or none. */
+  private def dirtyDigits: org.apache.spark.sql.Column = {
+    val sub0 = subAt(col("dg"), col("p0"))
+    when(col("k") % 7 === 0, subAt(sub0, col("p1")))
+      .when(col("k") % 3 === 1, sub0)
+      .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
+      .otherwise(col("dg"))
+  }
+
   /** The entity family's dirty-customer fixture (described at
     * q_dedup_entity): every customer's clean record (rid 2k) and its
     * dirty twin (rid 2k + 1), as (rid, name, nat, seg, key). */
@@ -3314,20 +3338,6 @@ object PipelineQueries {
         substring(col("c_name"), 10, 9).as("dg"),
         (col("c_custkey") % 9).cast("int").as("p0"),
         ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-    def subAt(dgc: org.apache.spark.sql.Column,
-              p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      concat(dgc.substr(lit(1), p),
-        ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-          .cast("string"),
-        dgc.substr(p + 2, lit(9)))
-    def delAt(dgc: org.apache.spark.sql.Column,
-              p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-    val sub0 = subAt(col("dg"), col("p0"))
-    val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-      .when(col("k") % 3 === 1, sub0)
-      .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-      .otherwise(col("dg"))
     base.select((col("k") * 2).as("rid"),
         col("c_name").as("name"), col("nat"), col("seg"))
       .unionByName(base.select((col("k") * 2 + 1).as("rid"),
@@ -3387,20 +3397,6 @@ object PipelineQueries {
           substring(col("c_name"), 10, 9).as("dg"),
           (col("c_custkey") % 9).cast("int").as("p0"),
           ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-      def subAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
       val pairs = base.select(col("seg"), col("c_name").as("clean"),
         concat(lit("Customer#"), dirtyDigits).as("dirty"))
       // computeOnce: four aggregate expressions read jwq, and a
@@ -3496,8 +3492,7 @@ object PipelineQueries {
     * and take the minimum verified archive entity, or stay fresh —
     * the archive never self-joins again (the incremental-dedup
     * discipline), and each arrival's label depends only on itself
-    * and the static index, so the same plan runs on a streaming
-    * frame (stream-static left join + keyed aggregate; see
+    * and the static index (left join + keyed aggregate; see
     * EntitySpec's batch-split invariance row). Fixture: every 5th
     * customer sends a THIRD record typo'd at a fresh position
     * (matches its archived entity through either archived twin);
@@ -3515,20 +3510,6 @@ object PipelineQueries {
           (col("c_custkey") % 9).cast("int").as("p0"),
           ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"),
           ((col("c_custkey") % 9 + 5) % 9).cast("int").as("p2"))
-      def subAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
       val rec = base.select((col("k") * 2).as("rid"),
           col("c_name").as("name"), col("nat"), col("seg"))
         .unionByName(base.select((col("k") * 2 + 1).as("rid"),
@@ -3605,20 +3586,6 @@ object PipelineQueries {
           substring(col("c_name"), 10, 9).as("dg"),
           (col("c_custkey") % 9).cast("int").as("p0"),
           ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"))
-      def subAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
       val rec = base.select((col("k") * 2).as("rid"),
           col("c_name").as("name"), col("nat"), col("seg"))
         .unionByName(base.select((col("k") * 2 + 1).as("rid"),
@@ -3782,20 +3749,6 @@ object PipelineQueries {
           ((col("c_custkey") % 9 + 3) % 9).cast("int").as("p1"),
           ((col("c_custkey") % 9 + 5) % 9).cast("int").as("p2"),
           ((col("c_custkey") % 9 + 7) % 9).cast("int").as("p3"))
-      def subAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p),
-          ((dgc.substr(p + 1, lit(1)).cast("int") + 1) % 10)
-            .cast("string"),
-          dgc.substr(p + 2, lit(9)))
-      def delAt(dgc: org.apache.spark.sql.Column,
-                p: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(dgc.substr(lit(1), p), dgc.substr(p + 2, lit(9)))
-      val sub0 = subAt(col("dg"), col("p0"))
-      val dirtyDigits = when(col("k") % 7 === 0, subAt(sub0, col("p1")))
-        .when(col("k") % 3 === 1, sub0)
-        .when(col("k") % 3 === 2, delAt(col("dg"), col("p0")))
-        .otherwise(col("dg"))
       val rec = base.select((col("k") * 2).as("rid"),
           col("c_name").as("name"), col("nat"), col("seg"))
         .unionByName(base.select((col("k") * 2 + 1).as("rid"),
@@ -5910,8 +5863,8 @@ object PipelineQueries {
     * counts, UNK counts, piece mass, fertility over matched words,
     * and a position-weighted piece digest that pins the identity AND
     * position of every chosen piece cross-engine. The Spark side is a
-    * pure per-row map over a literal vocabulary (stream-safe, no
-    * shuffle of text — the tokenizer-serving shape); the oracle
+    * pure per-row map over a literal vocabulary (no shuffle of
+    * text — the tokenizer-serving shape); the oracle
     * replays MaxMatch as a recursive CTE whose step picks max(len)
     * over prefix-matching vocab entries — greedy longest match needs
     * only the LENGTH, so the chosen piece is re-derived from the word
@@ -7517,8 +7470,9 @@ object PipelineQueries {
             .as("n_subframes"),
           sum(col("fa.n_samples").cast("long")).as("n_samples"),
           sum(col("fa.sum_s")).as("sum_s"),
-          min(col("fa.min_s")).as("min_s"),
-          max(col("fa.max_s")).as("max_s"),
+          // BIGINT like the oracle's least/greatest over its samples
+          min(col("fa.min_s")).cast("long").as("min_s"),
+          max(col("fa.max_s")).cast("long").as("max_s"),
           pmod(sum(col("fa.dg")), lit(FlacDigestMod)).as("dg"))
         .orderBy("source")
     },
@@ -8900,8 +8854,8 @@ object PipelineQueries {
     * window fingerprint set (model-sized — boilerplate is a
     * vocabulary, not a corpus), APPLY as a pure per-row map (all
     * occurrences removed — boilerplate semantics, vs the keep-first
-    * of q_dedup_substrings). The apply side is the stream-safe stage:
-    * DedupSubstrSpec proves stream == batch bit-for-bit. The oracle
+    * of q_dedup_substrings). DedupSubstrSpec pins the apply side on
+    * docs outside the fitted archive. The oracle
     * recomputes fit + apply in one statement from the same window
     * folds. */
   private val dedupSubstringsApply = Q("q_dedup_substrings_apply",

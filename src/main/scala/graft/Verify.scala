@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = LocalSpark.session(cpus.toInt)
+    val spark = LocalSpark.session(
+      graft.ops.PlanHints.countFromEnv("SPARK_GRAFT_CPUS", 4))
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -35,8 +35,7 @@ object Verify {
     // dump concurrently: each query is a small sf0.01 job, so serial
     // execution pays ~138× per-job latency; Spark's scheduler runs
     // concurrent jobs fine (FIFO across pools, separate output dirs)
-    val par = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "4").toInt)
+    val par = graft.ops.PlanHints.countFromEnv("SPARK_GRAFT_VERIFY_PAR", 4)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
     import scala.concurrent.{ExecutionContext, Future, Await}
     import scala.concurrent.duration.Duration

@@ -94,7 +94,7 @@ object Bpe {
 
   /** Segment words with a learned merge list: apply the merges in
     * order to the delimited sequence — a pure map (the tokenizer's
-    * APPLY side, stream-safe). Returns the symbol array. */
+    * APPLY side). Returns the symbol array. */
   def segment(tok: Column, merges: Seq[(String, String)]): Column = {
     val seq = merges.foldLeft(initSeq(tok)) { case (s, (a, b)) =>
       applyMerge(s, a, b)

@@ -35,8 +35,7 @@ import org.apache.spark.sql.functions._
   * shuffles; only (source, fp, len) rows reach the aggregate. Each
   * stage lands in its own computeOnce-pinned projection so the HOF
   * lambdas index materialized arrays instead of re-running the
-  * upstream stage per step (the PlanAudit rule). Stream-safe by
-  * construction. */
+  * upstream stage per step (the PlanAudit rule). */
 object Cdc {
 
   /** Window width (chars). */

@@ -52,9 +52,9 @@ object Dedup {
     * Computed per ROW in one pass by the native codegen'd
     * [[MinhashSigsExpr]] (tokenize → md5 → permuted min-fold in a
     * tight loop) — no explode, no shuffle: the signature stage is a
-    * pure map, so it scales with the scan and also works statelessly
-    * on a stream. [[minhashSignaturesSpec]] is the composable
-    * array-expression form it is equivalence-tested against.
+    * pure map, so it scales with the scan. [[minhashSignaturesSpec]]
+    * is the composable array-expression form it is
+    * equivalence-tested against.
     *
     * Null-text documents are dropped (the cheap `isNotNull` BEFORE
     * the kernel — an equivalent sentinel filter on the signature
@@ -109,7 +109,7 @@ object Dedup {
                numBands: Int = NumBands): DataFrame =
     // thin projection over the ONE band_key encoding
     // ([[bandRowsFromSigs]]) — a second hand-rolled encoding here
-    // could drift from the contract stream-static tagging joins on;
+    // could drift from the contract the band joins rely on;
     // the explode form also reads the signature frame once, not
     // numBands times
     bandRowsFromSigs(sigs, idCol, numBands)
@@ -131,14 +131,6 @@ object Dedup {
       explode(bandKeys).as("bk"))
       .select(col(idCol), col("sig"), col("bk.band"), col("bk.band_key"))
   }
-
-  /** Public band-row view (idCol, sig array, band, band_key) — the
-    * shape stream-static near-dup tagging joins on. Persist the
-    * result when it serves a streaming query's static side (it is
-    * re-read every trigger). */
-  def bandRowsOf(df: DataFrame, textCol: String, idCol: String,
-                 numBands: Int = NumBands): DataFrame =
-    bandRowsFromSigs(minhashSignatures(df, textCol, idCol), idCol, numBands)
 
   /** Distinct candidate pairs (a < b) from bucket collisions, with the
     * fraction of agreeing signature components (the MinHash Jaccard
@@ -357,18 +349,17 @@ object Dedup {
     * equi-join; shuffles carry band keys + 8-long signatures. */
   def assignToClusters(newDf: DataFrame, archive: DataFrame,
       textCol: String, idCol: String, maxBucket: Int = 0,
-      threshold: Double = 0.5,
-      cache: DataFrame => DataFrame = identity): DataFrame = {
-    // `cache` wraps the two signature frames: the archive kernel
-    // feeds its band rows, the exact-signature join AND the cluster
-    // closure, the batch kernel its band rows, the exact join and
-    // the final id list — uncached each consumer re-runs the
-    // tokenize+minhash kernel (pass a persist hook for batch
-    // queries; identity keeps the per-micro-batch streaming form
-    // unchanged, where the closure still persists its own pass)
+      threshold: Double = 0.5): DataFrame = {
+    // both signature frames are pinned: the archive kernel feeds its
+    // band rows, the exact-signature join AND the cluster closure,
+    // the batch kernel its band rows, the exact join and the final
+    // id list — unpinned, each consumer re-runs the tokenize+minhash
+    // kernel
+    def pin(df: DataFrame): DataFrame = graft.core.CacheRegistry.track(
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val sigCols = (0 until NumPerms).map(i => s"sig$i")
-    val aSigs = cache(minhashSignatures(archive, textCol, idCol))
-    val nSigs = cache(minhashSignatures(newDf, textCol, idCol))
+    val aSigs = pin(minhashSignatures(archive, textCol, idCol))
+    val nSigs = pin(minhashSignatures(newDf, textCol, idCol))
     val aCl = minhashClustersFromSigs(aSigs, idCol, maxBucket)
     val aBands = bandRowsFromSigs(aSigs, idCol, NumBands)
     val nBands = bandRowsFromSigs(nSigs, idCol, NumBands)
@@ -1243,8 +1234,7 @@ object Dedup {
     * window (all occurrences — boilerplate removal, not keep-first) —
     * a pure per-row map (token-hash list, window fold, membership
     * scan against a plan-constant sorted array, coverage rebuild), so
-    * it runs UNCHANGED on a streaming DataFrame and composes with any
-    * curation pipeline (the substring sibling of
+    * it composes with any curation pipeline (the substring sibling of
     * [[TextAnalysis.lineDedupApply]]). Same output columns as
     * [[dedupSubstringsKeepFirst]]. */
   def dedupSubstringsApply(df: DataFrame, textCol: String, idCol: String,

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * (map-side partial, output ≤ [[NumBuckets]] rows — model-sized);
   * the log-ratio vector is then inlined as a plan literal (the
   * centroid-inlining pattern), so weighting is a pure one-scan map —
-  * no join, no shuffle, stream-safe; selection is TakeOrdered
+  * no join, no shuffle; selection is TakeOrdered
   * (per-partition heaps), never a global sort. */
 object Dsir {
 

@@ -293,17 +293,16 @@ object Entity {
     * minimum verified archive entity, else the arrival's own id.
     * Each arrival's label depends on itself and the static index
     * alone — no arrival-arrival linking — so the assignment is
-    * batch-split invariant and runs unchanged on a streaming frame
-    * (explode → stream-static left join → keyed aggregate; arrivals
-    * that link only to EACH OTHER stay distinct entities until the
-    * next archive rebuild, the standard steady-state trade
-    * documented by the incremental dedup family). `keep` columns
-    * ride the grouping key (single-row grain per id, so grouping by
-    * them is free) — there is no join-back, which is what keeps the
-    * same plan legal under streaming. The arrival side explodes at
-    * depth min(τ, 2); the τ ≤ 2 recall guarantee additionally
-    * requires the [[archiveIndex]] to have been built with the SAME
-    * depth (alignment deletions split across the two sides). */
+    * batch-split invariant (explode → left join against the index →
+    * keyed aggregate; arrivals that link only to EACH OTHER stay
+    * distinct entities until the next archive rebuild, the standard
+    * steady-state trade documented by the incremental dedup family).
+    * `keep` columns ride the grouping key (single-row grain per id,
+    * so grouping by them is free) — there is no join-back. The
+    * arrival side explodes at depth min(τ, 2); the τ ≤ 2 recall
+    * guarantee additionally requires the [[archiveIndex]] to have
+    * been built with the SAME depth (alignment deletions split
+    * across the two sides). */
   def resolveAgainst(index: DataFrame, arrivals: DataFrame,
                      idCol: String, keyCol: String, nameCol: String,
                      blockCols: Seq[String], tau: Int = 1,
@@ -325,8 +324,8 @@ object Entity {
       .drop("__m")
     // null-key arrivals can't probe the index but must still appear
     // in the output as their own entity — the batch resolve()
-    // contract (its left join + coalesce path labels them id). A
-    // stateless filter+project union keeps the plan streaming-legal.
+    // contract (its left join + coalesce path labels them id), via a
+    // stateless filter+project union.
     val nullKey = arrivals.where(col(keyCol).isNull)
       .select((col(idCol) +: keep.map(col)) :+
         col(idCol).cast("long").as("entity"): _*)
@@ -338,7 +337,7 @@ object Entity {
     * ONLY (block columns, hash, record id); names live once per
     * record in [[archiveRecords]] and the probe fetches them per
     * candidate. What this buys, measured honestly: the RUNTIME row
-    * bytes — what the stream-static probe join shuffles and holds in
+    * bytes — what the index probe join shuffles and holds in
     * its hash table — drop >40% vs [[archiveIndex]](k = 2), whose
     * every neighborhood row carries the full name string
     * (EntitySpec's UnsafeRow measurement). Parquet-on-disk is
@@ -381,8 +380,8 @@ object Entity {
     * minimum verified archive entity — else the arrival's own id.
     * Same batch-split-invariance contract as [[resolveAgainst]]
     * (each arrival's label depends on itself and the static frames
-    * alone): two stream-static left joins + one keyed aggregate +
-    * the stateless null-key union. */
+    * alone): two left joins against the static frames + one keyed
+    * aggregate + the stateless null-key union. */
   def resolveAgainstSplit2(index: DataFrame, records: DataFrame,
                            arrivals: DataFrame, idCol: String,
                            keyCol: String, nameCol: String,

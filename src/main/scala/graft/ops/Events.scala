@@ -41,9 +41,8 @@ object Events {
            path: String): DataFrame =
     normalizeTs(spark.read.parquet(path))
 
-  /** The [[load]] normalization as a pure projection — also applies
-    * to a STREAMING DataFrame built over the same schema (stateless,
-    * so the stream keeps its source watermarkable shape).
+  /** The [[load]] normalization as a pure projection, for any frame
+    * read over the events schema.
     *
     * Timezone-independence contract: the fixture's parquet ts is
     * TIMESTAMP(MICROS) with isAdjustedToUTC=false, which Spark reads
@@ -238,9 +237,7 @@ object Events {
       .drop("__b")
   }
 
-  /** Tumbling-window aggregation over event time — the BATCH form of
-    * the streaming windowed aggregate (same window arithmetic, so a
-    * backfill job and the live stream bucket identically):
+  /** Tumbling-window aggregation over event time:
     * `window_start = (ts div w)·w` in exact int64 nano math (never
     * float division — epoch-nanos exceed 2⁵³), then per
     * (window, keys) count/sum in ONE hash aggregate. No window

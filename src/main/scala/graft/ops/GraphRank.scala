@@ -38,13 +38,13 @@ object GraphRank {
     * pairs — never payloads), a left-anti dangling aggregate reduced
     * to a ONE-ROW frame that joins back in-plan (the winsorize
     * broadcast pattern — no driver round-trip), and a node-grain left
-    * join. Lineage is cut per round with LAZY
-    * `localCheckpoint(false)` exactly like
-    * [[Dedup.connectedComponents]] — with a fixed iteration budget
-    * there is nothing to probe per round, so every round stays lazy
-    * and the caller's first action materializes the whole power
-    * iteration as ONE job (each round's RDD persisted as it streams
-    * past) instead of paying an eager-checkpoint job per round.
+    * join. Lineage is cut per round with `localCheckpoint(false)`
+    * like [[Dedup.connectedComponents]]; with a fixed iteration budget
+    * there is no per-round convergence probe. The rounds are NOT one
+    * job, though: under AQE (the default config) building each
+    * round's checkpoint RDD runs that round's shuffle stages as jobs
+    * while the DataFrame is built — q_embed_pagerank launched 46
+    * build-time jobs at sf0.01 (7 with AQE off).
     * Iterations are a fixed budget (power iteration converges
     * geometrically at rate dampNum/dampDen); edge and node tables are
     * checkpointed once so the caller's (possibly expensive) edge
@@ -72,7 +72,7 @@ object GraphRank {
     val n = nodes.count() // materializes e + nodes
     // empty graph -> empty (node, rank) frame, the repo's
     // degenerate-input contract (an incremental pipeline's empty
-    // micro-batch must not kill the job)
+    // batch must not kill the job)
     if (n == 0)
       return nodes.select(col("node"), lit(0L).as("rank"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -116,10 +116,12 @@ object GraphRank {
     * Scale shape per round: ONE edges⋈labels join (shuffles carry
     * (id, int) pairs), one map-side-partial count onto the
     * (node, label) grain, the struct-max argmax, and a node-grain
-    * left join; lineage cut per round with lazy
-    * `localCheckpoint(false)` (the [[pageRankInt]] /
-    * [[Dedup.connectedComponents]] discipline — fixed budget, no
-    * per-round probe, so the fixpoint materializes as one job).
+    * left join; lineage cut per round with `localCheckpoint(false)`
+    * (the [[pageRankInt]] / [[Dedup.connectedComponents]] discipline
+    * — fixed budget, no per-round probe). As for [[pageRankInt]],
+    * AQE runs each round's shuffle stages as jobs while the DataFrame
+    * is built: q_embed_labelprop launched 30 build-time jobs at
+    * sf0.01 (3 with AQE off).
     *
     * `seeds` is (nodeCol, labelCol; duplicate node rows collapse to
     * the smallest label). Edges are DEDUPLICATED and self-loops
@@ -266,56 +268,5 @@ object GraphRank {
     }
     cur.groupBy("u").agg(count(lit(1)).as("deg"))
       .withColumnRenamed("u", "node")
-  }
-
-  /** Converged k-core SNAPSHOT of a base graph — the persisted table
-    * a steady-state pipeline serves incremental arrivals against
-    * (see [[graft.streaming.StreamingOps.kCoreStalenessStream]]):
-    * every base node with its full undirected degree, whether it
-    * survived the k-core peel, and its surviving-subgraph degree.
-    * One [[kCore]] run + one degree aggregate. */
-  def coreSnapshot(edges: DataFrame, srcCol: String, dstCol: String,
-                   k: Int, maxRounds: Int = 12): DataFrame = {
-    val sym = edges
-      .select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      .union(edges.select(col(dstCol).cast("long").as("u"),
-        col(srcCol).cast("long").as("v")))
-      .where(col("u") =!= col("v")).distinct()
-    val baseDeg = sym.groupBy("u").agg(count(lit(1)).as("base_deg"))
-      .withColumnRenamed("u", "node")
-    val core = kCore(edges, srcCol, dstCol, k, maxRounds)
-    baseDeg.join(core, Seq("node"), "left")
-      .select(col("node"), col("base_deg"),
-        col("deg").isNotNull.as("in_core"),
-        coalesce(col("deg"), lit(0L)).as("core_deg"))
-  }
-
-  /** Batch form of the incremental k-core staleness check — "does
-    * this arrival batch change any node's core-ness materially":
-    * per node touched by a NEW edge, the cumulative arrival count
-    * against the persisted [[coreSnapshot]], and a `stale` flag for
-    * nodes that now NEED a recompute. Edges only arrive (append
-    * stream), so core membership can only GROW; the sound trigger is
-    * the degree upper bound: a non-core node whose full degree
-    * (base + arrivals) reaches k could enter the core — no false
-    * negatives (entering requires full degree ≥ k), and core nodes
-    * are never stale. The q_dedup_incremental discipline: the
-    * archive/snapshot is never re-joined against itself, only the
-    * batch grain touches it. Arrival edges are counted as given —
-    * dedup against the base is the ingest layer's contract. */
-  def kCoreStaleness(snapshot: DataFrame, newEdges: DataFrame,
-                     srcCol: String, dstCol: String, k: Int): DataFrame = {
-    val ends = newEdges.select(col(srcCol).cast("long").as("node"))
-      .unionByName(newEdges.select(col(dstCol).cast("long").as("node")))
-    val arrivals = ends.groupBy("node").agg(count(lit(1)).as("arrivals"))
-    arrivals.join(snapshot, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("in_core"), lit(false)).as("in_core"),
-        coalesce(col("core_deg"), lit(0L)).as("core_deg"),
-        coalesce(col("base_deg"), lit(0L)).as("base_deg"),
-        col("arrivals"))
-      .withColumn("stale", !col("in_core") &&
-        col("base_deg") + col("arrivals") >= k)
   }
 }

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * mirrors exactly — integer counts are bit-identical cross-engine.
   *
   * Scale shape: the embedding is ONE codegen'd tokenize+hash pass per
-  * row ([[TextHashExpressions.hashEmbed]]) — a pure map, no shuffle,
-  * stream-safe; downstream similarity work inherits the verified
+  * row ([[TextHashExpressions.hashEmbed]]) — a pure map, no shuffle;
+  * downstream similarity work inherits the verified
   * shapes of the embedding operators it feeds.
   */
 object HashEmbed {

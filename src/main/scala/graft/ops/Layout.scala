@@ -134,8 +134,7 @@ object Layout {
   }
 
   /** Target-size compaction — the small-files fix for any table that
-    * accumulated per-batch fragments (streaming sinks, incremental
-    * ingest): rewrite to ⌈rows/targetRows⌉ similar-sized files. With
+    * accumulated per-batch fragments (incremental ingest): rewrite to ⌈rows/targetRows⌉ similar-sized files. With
     * a `clusterBy` column the rewrite range-partitions on it (files
     * stay min/max-prunable on that column); without one it
     * round-robins for pure size balancing. The row count comes from

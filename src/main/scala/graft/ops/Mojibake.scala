@@ -66,7 +66,7 @@ object Mojibake {
   }
 
   /** Append `fixedCol` (repaired text) and `passesCol` (0 = clean)
-    * to a text column. Batched partition-local map, stream-safe. */
+    * to a text column. Batched partition-local map. */
   def fixColumn(df: DataFrame, textCol: String,
                 fixedCol: String = "fixed",
                 passesCol: String = "moji_passes"): DataFrame = {

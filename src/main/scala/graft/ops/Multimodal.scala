@@ -25,9 +25,9 @@ object Multimodal {
 
   /** Partition-local batched Row transform that stays INSIDE the
     * Dataset plan: `Dataset.mapPartitions` with an explicit Row
-    * encoder, NOT `df.rdd` — so every codec column below works on a
-    * STREAMING DataFrame too (stateless map, watermark-preserving;
-    * `df.rdd` would throw on a stream). The `grouped(blockSize)`
+    * encoder, NOT `df.rdd` — so every codec column below stays one
+    * stateless map inside the plan (a `df.rdd` round-trip would cut
+    * the logical plan at an RDD scan). The `grouped(blockSize)`
     * batching marks exactly where a JNI/FFmpeg batch call would sit. */
   private def mapBatched(df: DataFrame, outSchema: StructType)(
       f: Iterator[Row] => Iterator[Row]): DataFrame =
@@ -472,7 +472,7 @@ object Multimodal {
   /** Frame-energy audio fingerprint per row through the REAL WAV
     * parser ([[Codecs.audioFingerprint]]): 16-bit integer signature,
     * null for undecodable bytes — the dedup key for audio corpora.
-    * Batched map, bytes never shuffle, stream-safe. */
+    * Batched map, bytes never shuffle. */
   def audioFingerprintColumn(df: DataFrame, mediaCol: String,
                              frames: Int = 16,
                              blockSize: Int = 1024): DataFrame = {
@@ -495,7 +495,7 @@ object Multimodal {
     * null for undecodable bytes. The two-tier fingerprint feeds the
     * same group-by / hamming-ball dedup machinery as text signatures —
     * a pure batched map over the binary column (bytes never shuffle),
-    * stream-safe like every codec column. */
+    * like every codec column. */
   def imageHashColumn(df: DataFrame, mediaCol: String,
                       blockSize: Int = 1024): DataFrame = {
     val schema = df.schema
@@ -522,7 +522,7 @@ object Multimodal {
     * clip) plus the frame count — the embedding-ready form for
     * similarity/dedup over audio corpora. Null feature for non-WAV
     * bytes or clips shorter than one frame. Batched map, bytes never
-    * shuffle, stream-safe. */
+    * shuffle. */
   def audioFeatureColumn(df: DataFrame, mediaCol: String,
                          nFft: Int = 512, hop: Int = 256, nBands: Int = 8,
                          blockSize: Int = 1024): DataFrame = {
@@ -628,7 +628,7 @@ object Multimodal {
     * walk — duration, mdat size, container bitrate, first-track
     * handler/codec/dimensions), null for bytes that hold no valid
     * moov. No frame decode; pure-JVM byte arithmetic, batched
-    * partition-local, stream-safe. */
+    * partition-local. */
   def mp4MetaColumn(df: DataFrame, mediaCol: String,
                     outCol: String = "mp4",
                     blockSize: Int = 1024): DataFrame =
@@ -735,7 +735,7 @@ object Multimodal {
   }
 
   /** ID3v2.3 tag metadata per row ([[Id3.parse]]; null when no tag).
-    * Batched partition-local, stream-safe; bytes never shuffle. */
+    * Batched partition-local; bytes never shuffle. */
   def id3MetaColumn(df: DataFrame, mediaCol: String,
                     outCol: String = "id3",
                     blockSize: Int = 1024): DataFrame =
@@ -749,7 +749,7 @@ object Multimodal {
     * version, sample rate, nominal bitrate, channel count, exact
     * frame count and integer-exact duration, VBR flag), null for
     * bytes with no Layer-III sync. No sample decode; pure-JVM byte
-    * arithmetic, batched partition-local, stream-safe. */
+    * arithmetic, batched partition-local. */
   def mp3MetaColumn(df: DataFrame, mediaCol: String,
                     outCol: String = "mp3",
                     blockSize: Int = 1024): DataFrame =
@@ -787,7 +787,7 @@ object Multimodal {
 
   /** FLAC STREAMINFO metadata per row ([[Flac.parseMeta]]), null for
     * non-FLAC bytes. Pure-JVM bitfield arithmetic, batched
-    * partition-local, stream-safe. */
+    * partition-local. */
   def flacMetaColumn(df: DataFrame, mediaCol: String,
                      outCol: String = "flac",
                      blockSize: Int = 1024): DataFrame =
@@ -1553,7 +1553,7 @@ object Multimodal {
   }
 
   /** Both messy spellings as rows — 2 rows per input, `(…, outCol)`.
-    * Partition-local flatMap, stream-safe. */
+    * Partition-local flatMap. */
   def messyUrlsColumn(df: DataFrame, idCol: String,
                       outCol: String = "url"): DataFrame = {
     val ii = df.schema.fieldIndex(idCol)
@@ -1879,8 +1879,8 @@ object Multimodal {
     * script/style/comments dropped, block tags break lines, character
     * references decoded, whitespace normalized). Partition-local
     * batched map — the step between WARC response bodies and a
-    * `documents` table; no UDF registration, stream-safe like every
-    * codec column here. */
+    * `documents` table; no UDF registration, like every codec
+    * column here. */
   def htmlTextColumn(df: DataFrame, htmlCol: String,
                      outCol: String = "extracted",
                      blockSize: Int = 1024): DataFrame = {

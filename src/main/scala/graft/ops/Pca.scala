@@ -22,8 +22,7 @@ import org.apache.spark.sql.types._
   * the RowMatrix.computeGramian shape, never a d²-row explode); the
   * eigendecomposition is model-sized (d×d on the driver, Breeze
   * `eigSym`); the projection is a pure map with the k×d component
-  * matrix inlined as literals (no join, no broadcast round-trip,
-  * stream-safe).
+  * matrix inlined as literals (no join, no broadcast round-trip).
   *
   * Portability: sums accumulate in FIXED POINT (inputs and products
   * × 2²⁴, rounded to int64 — the [[Similarity.KmeansFxScale]] trick),

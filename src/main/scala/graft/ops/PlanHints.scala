@@ -23,17 +23,32 @@ import org.apache.spark.sql.types.DataType
   * inferred filter never materializes. */
 object PlanHints {
 
-  /** A byte-size threshold for a size-gated plan choice: the value of
-    * the environment variable `name`, or `default` when it is unset.
-    * A value that is not a non-negative whole number fails with an
-    * [[IllegalArgumentException]] that names the variable. */
+  /** A whole-number knob: the value of the environment variable
+    * `name`, or `default` when it is unset. A value that is not a
+    * whole number in [min, max] fails with an
+    * [[IllegalArgumentException]] that names the variable and says
+    * `what` it must be. The one parser behind [[bytesFromEnv]] and
+    * [[countFromEnv]]. */
+  private def longFromEnv(name: String, default: Long, min: Long,
+      max: Long, what: String, env: Map[String, String]): Long =
+    env.get(name).fold(default) { v =>
+      v.toLongOption.filter(n => n >= min && n <= max).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be $what, got '$v'"))
+    }
+
+  /** A byte-size threshold for a size-gated plan choice (a
+    * non-negative whole number). */
   def bytesFromEnv(name: String, default: Long,
                    env: Map[String, String] = sys.env): Long =
-    env.get(name).fold(default) { v =>
-      v.toLongOption.filter(_ >= 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"$name must be a non-negative byte count, got '$v'"))
-    }
+    longFromEnv(name, default, 0L, Long.MaxValue,
+      "a non-negative byte count", env)
+
+  /** A core or thread count (a positive `Int`). */
+  def countFromEnv(name: String, default: Int,
+                   env: Map[String, String] = sys.env): Int =
+    longFromEnv(name, default, 1L, Int.MaxValue,
+      "a positive integer", env).toInt
 
   /** Mark `c` non-nullable. ONLY valid immediately downstream of an
     * explicit `c.isNotNull` filter (KnownNotNull is a pass-through

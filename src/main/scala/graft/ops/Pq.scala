@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shapes:
   *  - [[encode]] is ONE scan with a single codegen'd kernel
-  *    ([[PqEncodeExpr]]) — no joins, no shuffle, streaming-safe.
+  *    ([[PqEncodeExpr]]) — no joins, no shuffle.
   *  - [[adcTop1]] broadcasts the (small) query set and scans the coded
   *    corpus once — the classic ADC sweep; combine with the IVF cell
   *    restriction ([[Similarity.cellAssignments]]) for sublinear probing.
@@ -38,7 +38,7 @@ object Pq {
     * than float32, one multiply to decode): qᵢ = clamp(⌊xᵢ·127⌋,
     * −127, 127) under a unit input scale. FLOOR, never cast-rounding
     * (ties-to-even vs truncate differs across engines). A pure map —
-    * stream-safe, no shuffle; decode is qᵢ/127. */
+    * no shuffle; decode is qᵢ/127. */
   def sq8Encode(emb: Column): Column =
     transform(emb, x =>
       least(greatest(floor(x.cast("double") * lit(127.0)), lit(-127.0)),

@@ -22,7 +22,7 @@ import graft.optimize.{Elbo, Scoring}
   * QualityClassifierSpec).
   *
   * Scale shape: features and scores are pure per-row maps (no
-  * shuffle, stream-safe); training runs the [[graft.optimize.Elbo]]
+  * shuffle); training runs the [[graft.optimize.Elbo]]
   * treeAggregate path — per-partition partial gradients against
   * broadcast θ, driver-side Adam — the same 1000-executor shape as
   * every other model in the library. */

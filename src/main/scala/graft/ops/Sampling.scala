@@ -66,7 +66,7 @@ object Sampling {
   /** Leakage-safe k-fold assignment (the cross-validation dual of
     * [[groupSplit]]): fold = portable 60-bit hash of the GROUP key
     * mod k — pure integer arithmetic, so folds are cross-engine
-    * exact, replayable, stream-safe, and whole duplicate families
+    * exact, replayable, and whole duplicate families
     * (sharing a group key) land in one fold by construction. One
     * scan, no shuffle, no join. */
   def groupKFold(df: DataFrame, groupCol: String, k: Int): DataFrame = {
@@ -224,8 +224,8 @@ object Sampling {
     * Scale shape: ONE codegen'd scan — the factor table rides in a
     * `when` chain like [[stratifiedSample]], the copy count is pure
     * row arithmetic, and the fan-out is `explode(sequence(...))`,
-    * which multiplies rows WITHOUT any shuffle or join; stream-safe
-    * (stateless per row), replayable, and stable under ingest. */
+    * which multiplies rows WITHOUT any shuffle or join; stateless
+    * per row, replayable, and stable under ingest. */
   def repeatFactorSample(df: DataFrame, idCol: String, groupCol: String,
                          factors: Map[String, Double],
                          defaultFactor: Double): DataFrame = {
@@ -507,25 +507,6 @@ object Sampling {
       col("__f")).drop("__f")
   }
 
-  /** APPLY side of [[unimaxRealize]] for a PRE-FITTED factor table
-    * (group → fractional epochs, e.g. collected from
-    * [[unimaxAllocation]] as alloc/toks): the factor rides the plan
-    * as a `when` chain, so the emitter is a STATELESS per-row map +
-    * explode — no join, no state — and runs unchanged on a streaming
-    * DataFrame (fit the allocation on the reference corpus, realize
-    * any stream against it). Groups absent from the table emit zero
-    * copies. Row-identical to [[unimaxRealize]] when the factors
-    * were fitted on the same corpus (pinned in StreamingSpec). */
-  def unimaxRealizeApply(df: DataFrame, idCol: String, groupCol: String,
-                         factors: Map[String, Double]): DataFrame = {
-    require(factors.values.forall(f => f >= 0.0 && f.isFinite),
-      s"factors must be finite and >= 0: $factors")
-    val f = factors.foldLeft(lit(0.0)) { case (acc, (g, v)) =>
-      when(col(groupCol) === lit(g), lit(v)).otherwise(acc)
-    }
-    unimaxEmit(df, idCol, f)
-  }
-
   /** DuckDB form of [[unimaxRealize]]'s salted fractional draw. */
   def UnimaxDrawSql(idCol: String): String =
     s"(${TextAnalysis.TokenHashSql(s"CAST($idCol AS VARCHAR) || '#umx'")} " +
@@ -571,7 +552,7 @@ object Sampling {
     * render as a single unmasked user turn. Returns
     * `struct(t INT, masked LONG, rendered STRING)` where `masked`
     * counts assistant-turn tokens (the spans a trainer backpropagates
-    * through). Pure per-row expression — no shuffle, stream-safe. */
+    * through). Pure per-row expression — no shuffle. */
   def chatTemplate(text: Column, docId: Column): Column = {
     val ws = TextAnalysis.tokens(text)
     val n = size(ws)

@@ -447,72 +447,6 @@ object Similarity {
           .as("margin"))
   }
 
-  /** The persisted mining INDEX for steady-state bitext mining: every
-    * side-1 vector with its bucket and its FIXED k-neighbor average
-    * (computed against the reference side-0 corpus at index-build
-    * time — the LASER deployment shape: target-side neighborhood
-    * statistics are baked into the index, queries only compute their
-    * own). Feed to [[bitextMineAgainst]] /
-    * [[graft.streaming.StreamingOps.bitextMineStream]]. */
-  def bitextArchive(df: DataFrame, idCol: String, embCol: String,
-                    sideCol: String, k: Int, nBits: Int = 8): DataFrame = {
-    val withB = lshBuckets(df, idCol, embCol, nBits)
-    val l = withB.where(col(sideCol) === 0)
-      .select(col(idCol).as("id_a"), col(embCol).as("emb_a"),
-        col("bucket"))
-    val r = withB.where(col(sideCol) === 1)
-      .select(col(idCol).as("id_b"), col(embCol).as("emb_b"),
-        col("bucket"))
-    val pairs = l.join(r, Seq("bucket"))
-      .select(col("id_b"), col("id_a"),
-        cosineOrNull(col("emb_a"), col("emb_b")).as("cos"))
-    val avgB = pairs.groupBy("id_b")
-      .agg(TopK.topK(col("cos"), col("id_a").cast("long"), k).as("tk"))
-      .select(col("id_b"),
-        (aggregate(transform(col("tk"), x => x.getField("score")),
-          lit(0.0), (a, v) => a + v) / size(col("tk")).cast("double"))
-          .as("avg_b"))
-    r.join(avgB, "id_b")
-  }
-
-  /** Mine a side-0 set against a persisted [[bitextArchive]] index:
-    * per-row margins use the row's OWN candidate neighborhood (avg_a
-    * over its archive candidates) and the archive's FIXED avg_b —
-    * so each side-0 row's result depends only on itself and the
-    * static index, making the computation batch-split invariant: a
-    * stream of arrivals produces row-for-row the batch result (the
-    * incremental-dedup discipline; StreamingSpec pins it). Same
-    * bucketed, O(k)-state shape as [[bitextMine]]. */
-  def bitextMineAgainst(side0: DataFrame, archive: DataFrame,
-                        idCol: String, embCol: String, k: Int,
-                        nBits: Int = 8): DataFrame = {
-    require(k >= 1)
-    val l = lshBuckets(side0, idCol, embCol, nBits)
-      .select(col(idCol).as("id_a"), col(embCol).as("emb_a"),
-        col("bucket"))
-    val pairs = l.join(archive, Seq("bucket"))
-      .select(col("id_a"), col("id_b"),
-        cosineOrNull(col("emb_a"), col("emb_b")).as("cos"),
-        col("avg_b"))
-    val avgA = pairs.groupBy("id_a")
-      .agg(TopK.topK(col("cos"), col("id_b").cast("long"), k).as("tk"))
-      .select(col("id_a"),
-        (aggregate(transform(col("tk"), x => x.getField("score")),
-          lit(0.0), (a, v) => a + v) / size(col("tk")).cast("double"))
-          .as("avg_a"))
-    val best = pairs.groupBy("id_a")
-      .agg(TopK.topK(col("cos"), col("id_b").cast("long"), 1).as("b1"))
-      .select(col("id_a"),
-        element_at(col("b1"), 1).getField("id").as("id_b"),
-        element_at(col("b1"), 1).getField("score").as("cos"))
-    best.join(avgA, "id_a")
-      .join(archive.select("id_b", "avg_b").distinct(), "id_b")
-      .select(col("id_a"), col("id_b"), col("cos"), col("avg_a"),
-        col("avg_b"),
-        (col("cos") / ((col("avg_a") + col("avg_b")) / lit(2.0)))
-          .as("margin"))
-  }
-
   def l2sq(a: Column, b: Column): Column = VecExpressions.l2sq(a, b)
 
   /** IVF coarse-quantizer assignment: nearest centroid by squared L2,
@@ -573,8 +507,8 @@ object Similarity {
   /** One-scan cell assignment (id, embedding, cell) from pre-collected
     * centroids — build this ONCE and reuse the DataFrame for stats,
     * probing, and joins. CONTRACT: null-embedding rows are DROPPED
-    * (no cell exists for them); row-count consumers (e.g. streaming
-    * per-cell counts) must count upstream if nulls are possible. */
+    * (no cell exists for them); row-count consumers (e.g. per-cell
+    * counts) must count upstream if nulls are possible. */
   def cellAssignments(df: DataFrame, idCol: String, embCol: String,
                       cents: Array[(Long, Seq[Double])]): DataFrame =
     withCells(df, idCol, embCol, cents)

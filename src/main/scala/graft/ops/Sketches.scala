@@ -50,18 +50,6 @@ object Sketches {
   private def hllEstimate(m: Int): Column =
     estCol(m, col("n_seen"), col("se"))
 
-  /** Scalar estimate from aggregated registers — the driver/streaming
-    * twin of [[hllEstimate]]: same α_m and linear-counting fallback,
-    * so register-equal sketches yield bit-equal estimates. */
-  def estimateFromRegisters(m: Int, nSeen: Long, se: Double): Double = {
-    val zeros = (m - nSeen).toDouble
-    val alpha = 0.7213 / (1.0 + 1.079 / m)
-    val raw = alpha * m.toDouble * m.toDouble / (se + zeros)
-    if (raw <= 2.5 * m && zeros > 0)
-      m.toDouble * math.log(m.toDouble / zeros)
-    else raw
-  }
-
   /** One-row cardinality estimate over the distinct values of `key`:
     * (hll_estimate, n_registers_set, sum_rho). The integer register
     * stats pin the sketch exactly. Delegates to [[hllCardinalityBy]]

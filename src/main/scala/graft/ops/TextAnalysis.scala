@@ -143,8 +143,8 @@ object TextAnalysis {
     * '{' / 'javascript' marker (case-insensitive). Returns
     * struct(cleaned, kept_lines, total_lines, keep) where `cleaned`
     * rejoins surviving lines with \n. Pure per-row column arithmetic
-    * (one split, HOF filter over the line array) — map-only,
-    * stream-safe, no shuffle. */
+    * (one split, HOF filter over the line array) — map-only, no
+    * shuffle. */
   def c4Flags(text: Column): Column = {
     val lines = split(text, "\n")
     def keepLine(l: Column): Column = {
@@ -216,8 +216,8 @@ object TextAnalysis {
     * and no chunk starts past the end.
     *
     * Returns (idCol, chunk_id, chunk, n_tok). Pure per-row map +
-    * explode — output rows ≈ n/stride per doc, no shuffle,
-    * stream-safe; the chunk arithmetic is exact integer math shared
+    * explode — output rows ≈ n/stride per doc, no shuffle; the
+    * chunk arithmetic is exact integer math shared
     * with any external engine's list-slice rendering. */
   def chunks(df: DataFrame, textCol: String, idCol: String,
              window: Int, stride: Int,
@@ -275,7 +275,7 @@ object TextAnalysis {
     * becomes one `<URL>` token rather than nested redactions, and
     * the structured numeric forms (phone, IP) claim their spans
     * before the generic digit-run sweep. Pure codegen'd string ops —
-    * a map-only pass at any scale, stream-safe. */
+    * a map-only pass at any scale. */
   /** Maximal digit runs of `text` with length in [minLen, maxLen] —
     * the card-number candidate extractor (maximal-run semantics, so
     * a 20-digit run is NOT a 19-digit candidate; identical to the
@@ -435,9 +435,9 @@ object TextAnalysis {
 
   /** The APPLY side: drop every line whose trimmed fingerprint is in
     * the fitted boilerplate set — a pure per-row map (one split, one
-    * higher-order filter against a plan-constant array), so it runs
-    * UNCHANGED on a streaming DataFrame and composes with any
-    * curation pipeline. Same output columns as [[lineDedup]]. */
+    * higher-order filter against a plan-constant array), so it
+    * composes with any curation pipeline. Same output columns as
+    * [[lineDedup]]. */
   def lineDedupApply(df: DataFrame, textCol: String,
                      frequentFps: Array[Long]): DataFrame = {
     val fps = lit(frequentFps)

@@ -548,9 +548,12 @@ object TextHashFns {
       if (w.nonEmpty && w.indexOf(Bpe.DelimCh) < 0) {
         val sb = new java.lang.StringBuilder(2 * w.length + 1)
         sb.append(Bpe.DelimCh)
+        // one symbol per code point, as Spark's split(tok, "") and
+        // DuckDB split (a surrogate pair is ONE symbol, not two)
         var ci = 0
         while (ci < w.length) {
-          sb.append(w.charAt(ci)); sb.append(Bpe.DelimCh); ci += 1
+          val n = Character.charCount(w.codePointAt(ci))
+          sb.append(w, ci, ci + n); sb.append(Bpe.DelimCh); ci += n
         }
         var seq = sb.toString
         var mi = 0

@@ -36,7 +36,7 @@ import org.apache.spark.sql.types.StringType
   * untouched; non-hierarchical schemes (mailto:) get scheme
   * lowercasing only.
   *
-  * Scale shape: a pure per-row string map — no shuffle, stream-safe.
+  * Scale shape: a pure per-row string map — no shuffle.
   */
 object Url {
 
@@ -201,7 +201,7 @@ object Url {
   }
 
   /** Append the canonical form of `urlCol` as `outCol`. Batched
-    * partition-local map, stream-safe, no shuffle. */
+    * partition-local map, no shuffle. */
   def canonicalColumn(df: DataFrame, urlCol: String,
                       outCol: String = "canonical_url"): DataFrame = {
     val schema = df.schema.add(outCol, StringType)

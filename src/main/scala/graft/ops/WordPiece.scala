@@ -26,7 +26,7 @@ import org.apache.spark.sql.types._
   * narrow Spark job over the cached word table ([[MergeRounds]]:
   * re-apply the merges so far, count symbols and pairs per partition,
   * take the ratio argmax on the driver), and the apply side is a pure
-  * per-row map (stream-safe).
+  * per-row map.
   *
   * Cross-engine determinism: pair and symbol counts are exact
   * integers; the score is ONE IEEE division, CAST(c AS DOUBLE) /
@@ -124,7 +124,7 @@ object WordPiece {
     * (np, unk, dg) — piece count, BERT whole-word-[UNK] flag, and the
     * position-weighted digest Σ (k+1)·pmod(hash(rawPiece), mod), mod
     * mod. A pure per-row map over a LITERAL vocabulary map — no
-    * shuffle, no state, stream-safe. Candidate lengths scan
+    * shuffle, no state. Candidate lengths scan
     * DESCENDING with first-match (the MaxMatch rule); each candidate
     * is materialized ONCE into an array before the fold, so the map
     * lookup never re-evaluates inside the picking lambda (the

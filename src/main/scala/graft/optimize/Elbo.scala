@@ -224,8 +224,8 @@ final class Elbo(
   /** Fold the driver-side KL value/gradient into a data-term result:
     * scales `grad` in place to `grad·(total/cnt) − ∇KL` and returns
     * the ELBO estimate `loss·scale − KL`. The single home of the
-    * scale/KL combination used by Adam steps, streaming micro-batch
-    * steps, and the L-BFGS objective. */
+    * scale/KL combination used by Adam steps and the L-BFGS
+    * objective. */
   private def combineKl(loss: Double, grad: Array[Double], cnt: Long,
                         total: Long, theta: Array[Double],
                         draws: Array[Double]): Double = {
@@ -542,44 +542,6 @@ final class Elbo(
     thetaToTree(state.x.toArray)
     module.initialize()
     -state.value
-  }
-
-  /** `steps` Adam ascent steps against an EXTERNAL batch (a streaming
-    * micro-batch, or any ad-hoc sample) instead of the DataSet — the
-    * online-inference entry point ([[graft.streaming.StreamingOps
-    * .onlineElbo]]). `totalRows` is the (estimated) population size
-    * scaling the data term against the KL, exactly as minibatch
-    * training scales by N/batch. θ syncs back to the module tree after
-    * the steps, so parameters are readable between micro-batches.
-    * Returns the last ELBO estimate. */
-  def stepOnBatch(df: org.apache.spark.sql.DataFrame, firstStep: Int,
-                  adam: Adam, totalRows: Long, steps: Int = 1,
-                  collection: String = Collections.Variables): Double = {
-    val theta = thetaFromTree()
-    val mask = collectionMask(collection)
-    val rdd = df.select(inputCols.map(col): _*)
-      .rdd.map(dataset.rowVec(inputCols))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = rdd.count()
-    val local = n * math.max(1, inputCols.length) <= localThreshold
-    val rows = if (local) rdd.collect() else null
-    var lastElbo = 0.0
-    try {
-      var it = 0
-      while (it < steps) {
-        val step = firstStep + it
-        val draws = freshDraws(step)
-        val (loss, grad, cnt) =
-          if (local) localGrad(rows, null, theta, draws)
-          else rddGrad(rdd, theta, draws)
-        lastElbo = combineKl(loss, grad, cnt, totalRows, theta, draws)
-        adam.step(theta, grad, mask)
-        it += 1
-      }
-    } finally rdd.unpersist()
-    thetaToTree(theta)
-    module.initialize()
-    lastElbo
   }
 }
 

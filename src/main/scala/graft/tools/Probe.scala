@@ -51,7 +51,7 @@ object Probe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try {
       val spark = LocalSpark.session(
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+        graft.ops.PlanHints.countFromEnv("SPARK_GRAFT_CPUS", 32))
       try run(spark, sfDir, mode, names, rounds, out) finally spark.stop()
     } finally log.foreach(_.close())
   }

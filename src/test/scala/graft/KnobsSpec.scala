@@ -4,7 +4,8 @@ import graft.ops.PlanHints
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Configuration hygiene: production paths read no JVM-global switch,
-  * and a malformed size knob fails with a message that names it. */
+  * and a malformed size or count knob fails with a message that
+  * names it. */
 class KnobsSpec extends AnyFunSuite {
 
   test("no production path reads a system property (examples/ and " +
@@ -39,6 +40,22 @@ class KnobsSpec extends AnyFunSuite {
     for (bad <- Seq("", "16MB", "1e6", "-1", " 5", "99999999999999999999")) {
       val e = intercept[IllegalArgumentException](
         PlanHints.bytesFromEnv(knob, 7L, Map(knob -> bad)))
+      assert(e.getMessage.contains(knob), e.getMessage)
+    }
+  }
+
+  test("countFromEnv (core and thread counts): default when unset, the " +
+    "value when a positive Int, and a named IllegalArgumentException " +
+    "on malformed, zero and negative values") {
+    val knob = "SPARK_GRAFT_TEST_CPUS"
+    assert(PlanHints.countFromEnv(knob, 32, Map.empty) == 32)
+    assert(PlanHints.countFromEnv(knob, 4, Map(knob -> "1")) == 1)
+    assert(PlanHints.countFromEnv(knob, 4, Map(knob -> "8")) == 8)
+    // parsed only: no session or pool is started with these values
+    for (bad <- Seq("", "four", "4.0", " 4", "0", "-1", "-32",
+        "2147483648")) {
+      val e = intercept[IllegalArgumentException](
+        PlanHints.countFromEnv(knob, 4, Map(knob -> bad)))
       assert(e.getMessage.contains(knob), e.getMessage)
     }
   }

@@ -107,5 +107,17 @@ class BpeSpec extends AnyFunSuite {
       .select(col("doc_id"), specNp.as("a"), kernelNp.as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     got.foreach { case (id, a, b) => assert(a == b, s"doc $id: $a != $b") }
+    // a supplementary-plane character is ONE symbol on both sides
+    // (code points, not UTF-16 chars): merges [(a, b)] give 2 + 1 and 3
+    val ab = Seq(("a", "b"))
+    val astral = Seq((4L, "\uD83D\uDE00x ab"),
+      (5L, "a\uD83D\uDE00\uD83D\uDE00")).toDF("doc_id", "text")
+      .select(col("doc_id"),
+        aggregate(words, lit(0L), (acc, w) =>
+          acc + size(Bpe.segment(w, ab)).cast("long")).as("a"),
+        TextHashExpressions.bpePieceCount(col("text"), ab).as("b"))
+      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
+    assert(astral == Map(4L -> ((3L, 3L)), 5L -> ((3L, 3L))), s"$astral")
   }
 }

@@ -162,4 +162,29 @@ class DedupSubstrSpec extends AnyFunSuite {
     assert(subs(1L)._4 == false, s"$subs")
     assert(subs(2L) == (("pad3 pad4", 8L, 6L, true)), s"$subs")
   }
+
+  test("a window set fitted on an archive applies to NEW docs at any " +
+    "token offset: the whole boilerplate run goes, other text stays") {
+    val boiler =
+      "all rights reserved by the example corporation inc worldwide"
+    val archive = docs((1L to 30L).map(i =>
+      i -> s"doc $i body text number$i word$i more$i stuff$i $boiler"): _*)
+    val fps = Dedup.frequentWindowFps(archive, "t", "id", k = 6,
+      maxDf = 10)
+    // the 9-token run = 4 overlapping 6-windows, each in all 30 docs
+    // > maxDf; every other window is per-doc unique
+    assert(fps.length == 4, s"got ${fps.length} fitted windows")
+    // new docs carry the run at DIFFERENT offsets (start / middle)
+    val fresh = docs(
+      31L -> s"$boiler and then fresh tail31 a b c",
+      32L -> s"lead32 x y $boiler trailing32",
+      33L -> "clean33 doc with no boilerplate at all right here")
+    val out = collectClean(
+      Dedup.dedupSubstringsApply(fresh, "t", "id", 6, fps))
+    assert(out(31L) == (("and then fresh tail31 a b c", 16L, 9L, true)),
+      s"$out")
+    assert(out(32L) == (("lead32 x y trailing32", 13L, 9L, true)), s"$out")
+    assert(out(33L) == (("clean33 doc with no boilerplate at all right " +
+      "here", 9L, 0L, false)), s"$out")
+  }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Degenerate-input behavior: every operator must return a defined,
   * empty-or-identity result on empty frames and single rows instead
   * of throwing — the property that keeps incremental pipelines alive
-  * when a micro-batch, partition, or filtered corpus comes up empty. */
+  * when an ingest batch, partition, or filtered corpus comes up empty. */
 class EdgeCasesSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark

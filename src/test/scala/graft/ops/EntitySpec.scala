@@ -106,6 +106,58 @@ class EntitySpec extends AnyFunSuite {
     assert(half1 ++ half2 == got)
   }
 
+  /** resolve an archive at `tau`, index it at depth `tau`, and map
+    * each arrival's rid to the entity resolveAgainst assigns it */
+  private def assignAgainst(archive: org.apache.spark.sql.DataFrame,
+      arrivals: org.apache.spark.sql.DataFrame, tau: Int): Map[Long, Long] = {
+    val resolved = Entity.resolve(archive, "rid", "key", "name",
+      Seq("blk"), tau = tau)
+    val index = Entity.archiveIndex(resolved, "key", "name",
+      Seq("blk"), k = tau)
+    Entity.resolveAgainst(index, arrivals, "rid", "key", "name",
+        Seq("blk"), tau = tau).select("rid", "entity").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  test("resolveAgainst links lev-1, exact and deletion-typo arrivals " +
+    "to their archive entity within the block; a wrong-block arrival " +
+    "stays fresh") {
+    val s = spark
+    import s.implicits._
+    val archive = Seq(
+      (10L, "77123", "n77123", "A"),
+      (11L, "77124", "n77124", "A"), // merges with 10 (lev 1)
+      (20L, "88888", "n88888", "A"),
+      (30L, "55555", "n55555", "B")
+    ).toDF("rid", "key", "name", "blk")
+    val arrivals = Seq(
+      (100L, "77125", "n77125", "A"), // lev 1 of 11 -> entity 10
+      (101L, "88888", "n88888", "A"), // exact match of 20
+      (102L, "77125", "n77125", "B"), // right key, wrong block
+      (103L, "55556", "n55556", "B"), // lev 1 of 30 in block B
+      (104L, "99999", "n99999", "A"), // fresh
+      (105L, "7712", "n7712", "A")    // deletion of 77123/77124
+    ).toDF("rid", "key", "name", "blk")
+    assert(assignAgainst(archive, arrivals, 1) == Map(100L -> 10L,
+      101L -> 20L, 102L -> 102L, 103L -> 30L, 104L -> 104L, 105L -> 10L))
+  }
+
+  test("resolveAgainst at tau=2: a double-substitution arrival links " +
+    "through the depth-2 index; wrong-block and lev-3 arrivals stay " +
+    "fresh") {
+    val s = spark
+    import s.implicits._
+    val archive = Seq((10L, "1234567", "n1234567", "A"))
+      .toDF("rid", "key", "name", "blk")
+    val arrivals = Seq(
+      (100L, "1934867", "n1934867", "A"), // sub+sub: lev 2 -> 10
+      (101L, "1234567", "n1234567", "B"), // wrong block: fresh
+      (102L, "9994567", "n9994567", "A")  // lev 3: fresh
+    ).toDF("rid", "key", "name", "blk")
+    assert(assignAgainst(archive, arrivals, 2) ==
+      Map(100L -> 10L, 101L -> 101L, 102L -> 102L))
+  }
+
   test("deletionKeys k=2 emits the deduplicated deletion-<=2 " +
     "neighborhood, and short keys don't trip the descending-sequence " +
     "edge") {
@@ -385,7 +437,7 @@ class EntitySpec extends AnyFunSuite {
     val split = Entity.archiveIndexSplit2(resolved, "rid", "key", Seq("blk"))
     val recs = Entity.archiveRecords(resolved, "rid", "name")
     // measure the RUNTIME row bytes (UnsafeRow) — what actually rides
-    // the stream-static join's shuffle and hash table at probe time.
+    // the index probe join's shuffle and hash table at probe time.
     // (Parquet-on-disk is a wash: dictionary encoding stores each
     // repeated name once either way; the join representation doesn't.)
     def rowBytes(df: org.apache.spark.sql.DataFrame): Long =

@@ -81,6 +81,28 @@ class LineDedupSpec extends AnyFunSuite {
     assert(out.map(_._2).toSeq == Seq("a", "b"))
   }
 
+  test("a boilerplate set fitted on an archive applies to NEW docs: " +
+    "every fitted line drops, the unseen body line survives") {
+    val s = spark
+    import s.implicits._
+    val archive = (1L to 30L).map { i =>
+      (i, s"shared header\nbody $i is unique\n" +
+        (if (i % 2 == 0) "even footer\n" else "") + "shared footer")
+    }.toDF("id", "t")
+    val fps = TextAnalysis.frequentLineFps(archive, "t", "id", 10)
+    // header (30) + footer (30) + even footer (15) all exceed maxDf=10
+    assert(fps.length == 3)
+    val fresh = (31L to 42L).map { i =>
+      (i, s"shared header\nnew body $i\neven footer\nshared footer")
+    }.toDF("id", "t")
+    val got = TextAnalysis.lineDedupApply(fresh, "t", fps)
+      .select("id", "cleaned", "kept_lines", "total_lines")
+      .as[(Long, String, Long, Long)].collect()
+    assert(got.length == 12)
+    assert(got.forall { case (i, c, k, n) =>
+      c == s"new body $i" && k == 1L && n == 4L }, got.toSeq.toString)
+  }
+
   test("urlHost lowercases and strips exactly a leading www. label") {
     val s = spark
     import s.implicits._

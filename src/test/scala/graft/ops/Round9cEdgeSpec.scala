@@ -130,14 +130,20 @@ class Round9cEdgeSpec extends AnyFunSuite {
       "MMR selected a LESS diverse set than plain top-k")
   }
 
-  test("ccnetApplyStream batch form: an archive-fitted LM applied to " +
-    "an EMPTY batch yields an empty frame, not a throw") {
+  test("ccnet chunk scoring: an archive-fitted LM applied to an EMPTY " +
+    "batch yields an empty frame, not a throw") {
     val docsDf = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val lm = NgramLm.train(docsDf, "text", "doc_id")
     val empty = docsDf.where(lit(false))
-    assert(graft.streaming.StreamingOps.ccnetApplyStream(empty, "text",
-      "doc_id", lm, window = 32, tauFx = 3639984880L,
-      fx = 1073741824.0).count() === 0L)
+    // the q_quality_ccnet scoring chain: chunk, bigram rows, LM joins
+    val ch = TextAnalysis.chunks(empty, "text", "doc_id", 32, 32)
+      .select(col("chunk"),
+        (col("doc_id") * lit(4096L) + col("chunk_id")).as("cid"))
+    val scored = NgramLm.bigramRows(ch, "chunk", "cid")
+      .join(lm.bigrams, Seq("b"), "left")
+      .join(lm.prefixes, Seq("w1"), "left")
+      .groupBy("cid").agg(count(lit(1)).as("nb"))
+    assert(scored.count() === 0L)
   }
 }
