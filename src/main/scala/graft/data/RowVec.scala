@@ -2,21 +2,21 @@ package graft.data
 
 import org.apache.spark.sql.Row
 
-/** Row → Array[Double] projector shared by the training and scoring
-  * paths (kept a standalone object so RDD closures capture only the
-  * column list, never an engine instance). */
+/** Row → doubles projector shared by the training and scoring paths
+  * (kept a standalone object so RDD closures capture only the column
+  * list, never an engine instance). */
 object RowVec {
 
-  /** `narrowF32 = true` truncates each value to its nearest
+  /** Writes a row's `names.length` values into `dst` from `off` on.
+    * `narrowF32 = true` truncates each value to its nearest
     * float32-representable double — the float32 data mode (reference
     * casts fed arrays to the configured `float_type`,
     * `param.py:689-699`). */
-  def of(names: Seq[String], narrowF32: Boolean = false)
-      : Row => Array[Double] = {
+  def writer(names: Seq[String], narrowF32: Boolean = false)
+      : (Row, Array[Double], Int) => Unit = {
     val n = names.length
     val namesArr = names.toArray
-    row => {
-      val in = new Array[Double](n)
+    (row, dst, off) => {
       var i = 0
       while (i < n) {
         val v = row.get(i) match {
@@ -27,10 +27,9 @@ object RowVec {
           case other => throw new IllegalArgumentException(
             s"non-numeric input ${namesArr(i)}: $other")
         }
-        in(i) = if (narrowF32) v.toFloat.toDouble else v
+        dst(off + i) = if (narrowF32) v.toFloat.toDouble else v
         i += 1
       }
-      in
     }
   }
 }

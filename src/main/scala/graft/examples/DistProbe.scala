@@ -5,7 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Distributed-ELBO throughput probe: it/s of the forced-treeAggregate
   * path as a function of stepsPerBatch (the per-job scheduling/scan
-  * amortization knob). Run:
+  * amortization knob), then the cost of materializing one 65,536-row
+  * minibatch on the driver two ways: `sample.collect()` of the row
+  * vectors, and the block sample + collect + split into rows that a
+  * fused `Elbo` group runs. Timed for the 2-column linear data and a
+  * 17-column RFF projection of it. Run:
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.examples.DistProbe"` */
 object DistProbe {
   def main(args: Array[String]): Unit = {
@@ -26,14 +30,42 @@ object DistProbe {
       val s = (System.nanoTime() - t0) / 1e9
       println(f"stepsPerBatch=$spb%2d  ${30 / s}%8.1f it/s  ($s%.3f s)")
     }
-    // cost split: sample+collect vs pure local sub-step
-    val vecs = ds.trainVectors(Seq("x", "y"))
-    for (_ <- 1 to 3) {
-      val t0 = System.nanoTime()
-      val rows = vecs.sample(withReplacement = true,
-        65536.0 / ds.trainCount, 1234).collect()
-      val t1 = System.nanoTime()
-      println(f"collect ${rows.length} rows: ${(t1 - t0) / 1e6}%.1f ms")
+    // one minibatch to the driver: row vectors vs blocks
+    val (w, b) = graft.gp.Rff.frequencies(1, 16,
+      breeze.linalg.DenseVector(1.0), seed = 13L)
+    val phis = graft.gp.RffGpr.featureCols(Seq(col("x")), w, b)
+    val rffCols = phis.indices.map(j => s"phi$j") :+ "y"
+    val rff = ds.data.select(phis.zipWithIndex.map { case (p, j) =>
+      p.as(s"phi$j") } :+ col("y"): _*)
+    val rffDs = new DataSet(rff, seed = 0)
+    for ((name, d, cols) <- Seq(("linear", ds, Seq("x", "y")),
+                                ("rff", rffDs, rffCols))) {
+      val frac = 65536.0 / d.trainCount
+      // persisted, so this times sampling a cached per-row vector RDD
+      val vecs = d.trainVectors(cols)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      vecs.count()
+      def ms(f: => Int): (Int, Double) = {
+        val t0 = System.nanoTime(); val n = f
+        (n, (System.nanoTime() - t0) / 1e6)
+      }
+      d.localTrain(cols) // builds the block cache
+      // interleaved, so JIT warm-up and host noise fall on both alike
+      val runs = (1 to 7).map(s => (
+        ms(vecs.sample(withReplacement = true, frac, 1234L + s)
+          .collect().length),
+        ms(DataSet.allRows(d.sampleBlocks(cols, training = true, frac,
+          1234L + s).collect(), cols.length).length)))
+      val (rowsMs, blockMs) = runs.unzip
+      for (((n, r), (m, bl)) <- runs) {
+        require(n == m, s"row and block samples differ: $n vs $m rows")
+        println(f"$name%-6s ${cols.length}%2d cols  $n rows: " +
+          f"sample.collect $r%6.1f ms  blocks $bl%6.1f ms")
+      }
+      def med(xs: Seq[(Int, Double)]) = xs.map(_._2).sorted.apply(xs.length / 2)
+      println(f"$name%-6s median of 7: sample.collect ${med(rowsMs)}%.1f ms  " +
+        f"blocks ${med(blockMs)}%.1f ms")
+      vecs.unpersist()
     }
     spark.stop()
   }

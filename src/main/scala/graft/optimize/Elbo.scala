@@ -4,7 +4,6 @@ import breeze.linalg.DenseVector
 import graft.autodiff._
 import graft.core._
 import graft.data.DataSet
-import org.apache.spark.sql.functions.col
 
 /** The ELBO engine: compiles a user model (per-row log-likelihood over
   * the parameter tree) + the automatic ΣKL term into autodiff tapes,
@@ -45,8 +44,8 @@ final class Elbo(
       * Spark at all, and exactly the regime the single-node reference
       * (whole dataset in process memory) occupies. The old 8M default
       * pushed a 600k-row × 17-column RFF-GP onto the distributed
-      * path, paying the ~70 ms/step job floor (≈14 it/s) for data
-      * that fits the driver 50× over. */
+      * path, paying a Spark job per step for data that fits the
+      * driver 50× over. */
     localThreshold: Long = Elbo.LocalThresholdCells) extends Serializable {
 
   // ---- slot layout: full flat θ over sortedParams (deterministic order)
@@ -129,14 +128,6 @@ final class Elbo(
   private val augmentIsDefault: Boolean =
     augment.asInstanceOf[AnyRef] eq Elbo.NoAugment
 
-  /** Input columns projected ONCE to a persisted vector RDD — gradient
-    * steps then skip Catalyst planning and Row decoding entirely
-    * (augment-free models only; augmented batches change per step).
-    * Cached on the DataSet so successive Elbo builds over the same
-    * data (hyperparameter re-linearization) share the projection. */
-  @transient private lazy val trainVecs = dataset.trainVectors(inputCols)
-  @transient private lazy val testVecs = dataset.testVectors(inputCols)
-
   private def useLocal: Boolean = augmentIsDefault &&
     (dataset.trainCount + dataset.testCount) *
       math.max(1, inputCols.length) <= localThreshold
@@ -154,20 +145,25 @@ final class Elbo(
       math.max(1, n / 2048))
     val chunk = (n + nThreads - 1) / math.max(1, nThreads)
     val losses = new Array[Double](nThreads)
-    val grads = Array.fill(nThreads)(new Array[Double](nSlots))
+    val grads = new Array[Array[Double]](nThreads)
+    val nS = nSlots
     val tape = rowTape
     java.util.stream.IntStream.range(0, nThreads).parallel().forEach { t =>
       // per-thread scratch via the same thread-local the distributed
       // path uses — fresh newValues pairs here were tape-sized garbage
       // per thread per STEP (unused entirely under Janino codegen)
-      val (vals, adj) = Elbo.scratchFor(tape)
-      val g = grads(t)
+      val sc = Elbo.scratchFor(tape)
+      // allocated by its worker, so each thread's accumulator sits in
+      // that thread's allocation buffer: back-to-back arrays from one
+      // thread shared cache lines, and every row's write contended
+      val g = new Array[Double](nS)
+      grads(t) = g
       var l = 0.0
       var i = t * chunk
       val end = math.min(n, (t + 1) * chunk)
       while (i < end) {
         val row = if (idx == null) rows(i) else rows(idx(i))
-        l += tape.evalGradFast(row, theta, draws, vals, adj, g)
+        l += tape.evalGradFast(row, theta, draws, sc.vals, sc.adj, g)
         i += 1
       }
       losses(t) = l
@@ -184,13 +180,18 @@ final class Elbo(
 
   /** Distributed Σ over rows of (logp, ∇logp) via treeAggregate — the
     * MLlib pattern: per-partition partial accumulators against a
-    * per-step broadcast θ, tree-reduced. */
-  private def rddGrad(rdd: org.apache.spark.rdd.RDD[Array[Double]],
+    * per-step broadcast θ, tree-reduced. Each element of `blocks` is a
+    * row-major block of input rows ([[graft.data.DataSet.pack]]),
+    * folded whole per `seqOp` call into one mutable accumulator per
+    * partition. */
+  private def rddGrad(blocks: org.apache.spark.rdd.RDD[Array[Double]],
                       theta: Array[Double], draws: Array[Double])
       : (Double, Array[Double], Long) = {
     val tape = rowTape
     val nS = nSlots
-    val sc = rdd.sparkContext
+    val width = inputCols.length
+    val stride = DataSet.stride(width)
+    val sc = blocks.sparkContext
     // small θ rides in the task closure (one serialization, no
     // broadcast create/destroy round-trip per step); broadcast only
     // pays off once θ is large enough that per-task re-send hurts
@@ -199,26 +200,32 @@ final class Elbo(
     val bDraws = if (useBroadcast) sc.broadcast(draws) else null
     val cTheta = if (useBroadcast) null else theta
     val cDraws = if (useBroadcast) null else draws
-    val depth = math.max(2, (math.log(math.max(rdd.getNumPartitions, 2)) /
+    val depth = math.max(2, (math.log(math.max(blocks.getNumPartitions, 2)) /
       math.log(4)).ceil.toInt)
-    val (loss, grad, cnt) =
-      try rdd.treeAggregate((0.0, new Array[Double](nS), 0L))(
-        seqOp = { case ((l, g, n), in) =>
+    val acc =
+      try blocks.treeAggregate(new Elbo.GradAcc(nS))(
+        seqOp = (acc, block) => {
           // scratch arrays reused via thread-local: allocation-free over
-          // millions of rows
+          // millions of rows; each row is copied into the tape's input
           val scratch = Elbo.scratchFor(tape)
           val th = if (cTheta != null) cTheta else bTheta.value
           val dr = if (cDraws != null) cDraws else bDraws.value
-          val v = tape.evalGradFast(in, th, dr, scratch._1, scratch._2, g)
-          (l + v, g, n + 1)
+          val in = scratch.in
+          var l = acc.loss
+          var off = 0
+          while (off < block.length) {
+            System.arraycopy(block, off, in, 0, width)
+            l += tape.evalGradFast(in, th, dr, scratch.vals, scratch.adj,
+              acc.grad)
+            off += stride
+          }
+          acc.loss = l
+          acc.count += block.length / stride
+          acc
         },
-        combOp = { case ((l1, g1, n1), (l2, g2, n2)) =>
-          var i = 0
-          while (i < nS) { g1(i) += g2(i); i += 1 }
-          (l1 + l2, g1, n1 + n2)
-        }, depth)
+        combOp = (a, b) => a.merge(b), depth)
       finally if (useBroadcast) { bTheta.destroy(); bDraws.destroy() }
-    (loss, grad, cnt)
+    (acc.loss, acc.grad, acc.count)
   }
 
   /** Fold the driver-side KL value/gradient into a data-term result:
@@ -239,8 +246,22 @@ final class Elbo(
     loss * scale - kl
   }
 
+  /** A minibatch of about `minibatchSize` rows of a split, sampled from
+    * its persisted blocks by the step's seed. ONE keying for every path
+    * — graft.data.DataSet.sampleSeed — so crossing the localThreshold
+    * boundary (or the augment boundary) never changes which rows an
+    * evaluation sees. No 1.0 cap: with replacement, fraction > 1 is
+    * valid and a batch larger than the split delivers that many draws. */
+  private def sampledBlocks(minibatchSize: Int, step: Int, training: Boolean)
+      : org.apache.spark.rdd.RDD[Array[Double]] = {
+    val total = if (training) dataset.trainCount else dataset.testCount
+    dataset.sampleBlocks(inputCols, training,
+      minibatchSize.toDouble / math.max(1L, total),
+      DataSet.sampleSeed(seed, step, training))
+  }
+
   /** One batch evaluation, choosing the cheapest valid path:
-    * driver-local (tiny data), persisted-vector RDD (no augment), or
+    * driver-local (tiny data), persisted blocks (no augment), or
     * full DataFrame (augmented). */
   private def batchGrad(step: Int, minibatchSize: Int, training: Boolean,
                         theta: Array[Double], draws: Array[Double])
@@ -255,26 +276,14 @@ final class Elbo(
       }
       localGrad(rows, idx, theta, draws)
     } else if (augmentIsDefault) {
-      val base = if (training) trainVecs else testVecs
-      val total = if (training) dataset.trainCount else dataset.testCount
-      val rdd = if (minibatchSize <= 0) base
-      else base.sample(withReplacement = true,
-        minibatchSize.toDouble / math.max(1L, total),
-        // ONE keying for every path — graft.data.DataSet.sampleSeed —
-        // so crossing the localThreshold boundary (or the augment
-        // boundary) never changes which rows an evaluation sees.
-        // No 1.0 cap: with replacement, fraction > 1 is valid and a
-        // batch larger than the split should deliver that many draws
-        graft.data.DataSet.sampleSeed(seed, step, training))
-      rddGrad(rdd, theta, draws)
+      rddGrad(if (minibatchSize <= 0) dataset.blocks(inputCols, training)
+        else sampledBlocks(minibatchSize, step, training), theta, draws)
     } else {
       val df =
         if (minibatchSize <= 0) { if (training) dataset.train else dataset.test }
         else if (training) dataset.minibatch(minibatchSize, step)
         else dataset.testBatch(minibatchSize, step)
-      val f = dataset.rowVec(inputCols)
-      val rdd = augment(df, step).select(inputCols.map(col): _*).rdd.map(f)
-      rddGrad(rdd, theta, draws)
+      rddGrad(dataset.pack(augment(df, step), inputCols), theta, draws)
     }
   }
 
@@ -298,12 +307,14 @@ final class Elbo(
     *
     * `stepsPerBatch = k > 1` fuses k Adam sub-steps onto ONE sampled
     * minibatch: the batch is materialized once (collected to the
-    * driver when it fits the local budget — a minibatch is
-    * memory-bounded BY CONSTRUCTION, so this holds at any corpus
-    * scale — else persisted as a cached RDD) and the k sub-steps each
-    * draw fresh reparameterization noise against it. On the
-    * distributed path this divides the ~50 ms/step job-scheduling
-    * floor by k; statistically it is plain minibatch reuse (same
+    * driver as a few row-major blocks when it fits the local budget —
+    * a minibatch is memory-bounded BY CONSTRUCTION, so this holds at
+    * any corpus scale — else persisted as cached blocks) and the k
+    * sub-steps each draw fresh reparameterization noise against it.
+    * On the distributed path this divides the per-step job (a median
+    * of 33–42 ms in the traced perfbench `train` runs of
+    * plans/elbo_blocks/trace_train.log) by k;
+    * statistically it is plain minibatch reuse (same
     * estimator, k-fold-correlated batches), standard practice when
     * sampling dominates step cost. */
   def optimize(maxiter: Int, minibatchSize: Int = -1, lr: Double = 0.01,
@@ -443,10 +454,12 @@ final class Elbo(
         var rdd: org.apache.spark.rdd.RDD[Array[Double]] = null
         var df: org.apache.spark.sql.DataFrame = null
         if (augmentIsDefault) {
-          val frac = minibatchSize.toDouble / math.max(1L, total)
-          val sampled = trainVecs.sample(withReplacement = true, frac,
-            graft.data.DataSet.sampleSeed(seed, groupStart, training = true))
-          if (collectable) rows = sampled.collect()
+          val sampled = sampledBlocks(minibatchSize, groupStart,
+            training = true)
+          // a few large blocks cross to the driver, not one object per
+          // row; split there into the rows localGrad walks
+          if (collectable)
+            rows = DataSet.allRows(sampled.collect(), inputCols.length)
           else {
             rdd = sampled.persist(
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -465,11 +478,8 @@ final class Elbo(
             val (loss, grad, cnt) =
               if (rows != null) localGrad(rows, null, theta, draws)
               else if (rdd != null) rddGrad(rdd, theta, draws)
-              else {
-                val f = dataset.rowVec(inputCols)
-                rddGrad(augment(df, step).select(inputCols.map(col): _*)
-                  .rdd.map(f), theta, draws)
-              }
+              else rddGrad(dataset.pack(augment(df, step), inputCols),
+                theta, draws)
             applyStep(loss, grad, cnt, draws, step)
             s += 1
           }
@@ -561,17 +571,36 @@ object Elbo {
   val NoAugment: (org.apache.spark.sql.DataFrame, Int) =>
     org.apache.spark.sql.DataFrame = (df, _) => df
 
-  private val scratch =
-    new ThreadLocal[(Array[Double], Array[Double], CompiledExpr)]()
+  /** One thread's working arrays for a tape: the value and adjoint
+    * slots of the interpreter and one input row. */
+  private[optimize] final class Scratch(val tape: CompiledExpr) {
+    val vals: Array[Double] = tape.newValues
+    val adj: Array[Double] = tape.newValues
+    val in: Array[Double] = new Array[Double](tape.nIn)
+  }
 
-  private[optimize] def scratchFor(tape: CompiledExpr)
-      : (Array[Double], Array[Double]) = {
+  private val scratch = new ThreadLocal[Scratch]()
+
+  private[optimize] def scratchFor(tape: CompiledExpr): Scratch = {
     val cur = scratch.get()
-    if (cur == null || (cur._3 ne tape)) {
-      val fresh = (tape.newValues, tape.newValues, tape)
-      scratch.set(fresh)
-      (fresh._1, fresh._2)
-    } else (cur._1, cur._2)
+    if (cur != null && (cur.tape eq tape)) cur
+    else { val fresh = new Scratch(tape); scratch.set(fresh); fresh }
+  }
+
+  /** A partition's mutable partial Σ (logp, ∇logp, rows): one object,
+    * serialized once per task, instead of a tuple per row. */
+  private[optimize] final class GradAcc(nSlots: Int) extends Serializable {
+    var loss = 0.0
+    val grad = new Array[Double](nSlots)
+    var count = 0L
+
+    def merge(o: GradAcc): GradAcc = {
+      var i = 0
+      while (i < grad.length) { grad(i) += o.grad(i); i += 1 }
+      loss += o.loss
+      count += o.count
+      this
+    }
   }
 
   /** Model-building context handed to the user's log-likelihood

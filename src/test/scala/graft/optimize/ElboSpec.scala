@@ -356,4 +356,114 @@ class ElboSpec extends AnyFunSuite {
     assert(resumed == uninterrupted,
       s"mid-group resume diverged: $resumed vs $uninterrupted")
   }
+
+  // 40,000 rows in two partitions from integer arithmetic only, so the
+  // data (and every trajectory below) is the same on any JVM
+  private lazy val goldenData = spark.range(0, 40000, 1, 2)
+    .select(((col("id") * 7919 % 1000) / 250.0 - 2.0).as("x"),
+      ((col("id") * 104729 % 997) / 997.0 - 0.5).as("e"))
+    .select(col("x"), (lit(0.4) + lit(0.6) * col("x") + col("e") * 1.6).as("y"))
+
+  /** θ, as hex-encoded doubles, after the given (stepsPerBatch, steps)
+    * phases of a 3-posterior Bayesian linear model. Minibatches of 5,000
+    * rows give the driver-local gradient two threads on any host with
+    * two or more cores, so the chunked summation order is host-free. */
+  private def goldenTheta(threshold: Long, phases: Seq[(Int, Int)],
+                          augmented: Boolean = false): Seq[String] = {
+    val root = new Module
+    val a = root.add("a", new Variational.Normal(Seq(1)))
+    val b = root.add("b", new Variational.Normal(Seq(1)))
+    val c = root.add("c", new Variational.Normal(Seq(1)))
+    val ds = new DataSet(goldenData, seed = 0)
+    val cols = if (augmented) Seq("x", "y", "w") else Seq("x", "y")
+    val augment: (org.apache.spark.sql.DataFrame, Int) =>
+      org.apache.spark.sql.DataFrame =
+      if (augmented) (df, step) => df.withColumn("w",
+        lit(1.0) + col("x") * ((step % 3) * 0.01))
+      else Elbo.NoAugment
+    val elbo = new Elbo(root, ds, cols, ctx => {
+      val f = ctx.sample1(a) + ctx.sample1(b) * ctx.in("x")
+      val ll = ExprFns.gaussian(ctx.in("y"), f,
+        graft.autodiff.Expr.exp(ctx.sample1(c)))
+      if (augmented) ll * ctx.in("w") else ll
+    }, seed = 0, augment = augment, localThreshold = threshold)
+    val adam = new Adam(elbo.nSlots, lr = 0.05)
+    var step = 0
+    phases.foreach { case (spb, n) =>
+      elbo.optimize(n, minibatchSize = 5000, lr = 0.05, adamState = adam,
+        startStep = step, stepsPerBatch = spb)
+      step += n
+    }
+    val out = elbo.thetaFromTree().toSeq.map(d =>
+      java.lang.Long.toHexString(java.lang.Double.doubleToRawLongBits(d)))
+    ds.unpersist()
+    out
+  }
+
+  test("golden θ: 20 fused + 10 unfused forced-distributed steps and 20 " +
+    "local steps reproduce the recorded trajectories bit for bit") {
+    val dist = goldenTheta(0L, Seq(5 -> 20, 1 -> 10))
+    val local = goldenTheta(Elbo.LocalThresholdCells, Seq(1 -> 20))
+    val augmented = goldenTheta(0L, Seq(1 -> 10), augmented = true)
+    // recorded values: a change to batching, draws or summation order
+    // moves them
+    assert(dist == Seq("3fd50f87e78c0faf", "bfed9f979f22b9e4",
+      "3fe0a526b6f945e9", "bfe7230512e5111a", "3fd8ce78289faa8b",
+      "bfd97cdd982128b9"), s"distributed θ: $dist")
+    assert(local == Seq("3fd7638c6b287462", "bfe85f72d5e6c83c",
+      "3fd7671cb8bdd2a7", "bfe1bc1d901b6237", "3fe0d9d3bc3396aa",
+      "bfd1819bd25fa50a"), s"local θ: $local")
+    assert(augmented == Seq("3fd36d9d94632d61", "bfdf8c2ea0cf767f",
+      "3fcf516d5d0526c7", "bfd46791a8bd0004", "3fda9bf7ec382a84",
+      "bfc0f225f942ea03"), s"augmented θ: $augmented")
+  }
+
+  test("forced-distributed training runs one Spark job per fused group " +
+    "and one per unfused step") {
+    val sc = spark.sparkContext
+    val root = new Module
+    val a = root.add("a", new Variational.Normal(Seq(1)))
+    val b = root.add("b", new Variational.Normal(Seq(1)))
+    val ds = new DataSet(goldenData, seed = 0)
+    val elbo = new Elbo(root, ds, Seq("x", "y"), ctx => ExprFns.gaussian(
+      ctx.in("y"), ctx.sample1(a) + ctx.sample1(b) * ctx.in("x"),
+      graft.autodiff.Expr.c(1.0)), seed = 0, localThreshold = 0L)
+    val adam = new Adam(elbo.nSlots, lr = 0.05)
+    // warm: the split counts and the projection cache are built here
+    elbo.optimize(5, minibatchSize = 5000, adamState = adam, stepsPerBatch = 5)
+    elbo.optimize(1, minibatchSize = 5000, adamState = adam, startStep = 5)
+    // job ids grow in submission order and the bus delivers events in
+    // order, so the jobs between two marker jobs are the optimizer's
+    val ids = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        ids.add((e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("elbo-fused")
+      elbo.optimize(20, minibatchSize = 5000, adamState = adam,
+        startStep = 10, stepsPerBatch = 5)
+      marker("elbo-unfused")
+      elbo.optimize(10, minibatchSize = 5000, adamState = adam,
+        startStep = 30)
+      marker("elbo-end")
+      val deadline = System.nanoTime() + 30e9.toLong
+      def seen(name: String) =
+        ids.toArray(Array.empty[(Int, String)]).find(_._2 == name).map(_._1)
+      while (seen("elbo-end").isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val Seq(f, u, e) = Seq("elbo-fused", "elbo-unfused", "elbo-end")
+        .map(n => seen(n).get)
+      assert(u - f - 1 == 4, s"${u - f - 1} jobs for 4 fused groups")
+      assert(e - u - 1 == 10, s"${e - u - 1} jobs for 10 unfused steps")
+    } finally { sc.removeSparkListener(listener); ds.unpersist() }
+  }
 }
