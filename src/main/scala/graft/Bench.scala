@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.ops.PlanHints.sfDirFromEnv()
     val spark = LocalSpark.session(
       graft.ops.PlanHints.countFromEnv("SPARK_GRAFT_CPUS", 32))
     // untimed warmup: a representative scan+agg PLUS one heavy
@@ -21,8 +21,7 @@ object Bench {
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those
     // queries (skips the optimizer segments); artifact writes are
     // suppressed so a subset run never clobbers BENCH_FULL.json
-    val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val benchOnly = graft.ops.PlanHints.namesFromEnv("SPARK_GRAFT_BENCH_ONLY")
     // SPARK_GRAFT_BENCH_ONLY=elbo times just the optimizer segments
     // (the round-9 verdict's bisect recipe assumed this worked; it
     // didn't — benchOnly used to skip the segments unconditionally)

@@ -19,7 +19,6 @@ import graft.ops.{Events, TextAnalysis}
   * plan.
   */
 object EventQueries {
-  import OracleQueries.Q
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Events.load(s, s"$dir/events.parquet")
@@ -871,7 +870,7 @@ object EventQueries {
       "var_y / ((mean_y * 0.01) * (mean_y * 0.01))) AS BIGINT) " +
       "AS n_per_arm_for_1pct FROM f")
 
-  val all: Vector[Q] = Vector(eventsAsof, eventsSessionize, eventsProps,
+  val all: Seq[Q] = Seq(eventsAsof, eventsSessionize, eventsProps,
     eventsRange, eventsZorder, eventsHilbert, eventsWindow, eventsFunnel,
     eventsRetention, eventsTransitions, eventsEwma, eventsCusum,
     eventsDecayed, eventsPaths, eventsInterarrival, eventsSeasonal,

@@ -24,10 +24,6 @@ import graft.functions.{Densities, Numerics, Transforms}
   */
 object OracleQueries {
 
-  final case class Q(name: String,
-                     spark: (SparkSession, String) => DataFrame,
-                     sql: String)
-
   private def table(s: SparkSession, dir: String, t: String): DataFrame =
     s.read.parquet(s"$dir/$t.parquet")
 
@@ -135,7 +131,7 @@ object OracleQueries {
   // --------------------------------------------- transforms (fwd + roundtrip)
 
   private def transformQ(name: String, t: Transforms.type => graft.functions.Transform,
-                         fwdSql: String, bwdSql: String): Q = Q(name,
+                         fwdSql: => String, bwdSql: => String): Q = Q(name,
     (s, d) => {
       val tr = t(Transforms)
       val y = tr.forward(xq)
@@ -228,7 +224,7 @@ object OracleQueries {
   private def sqdistSql(sign: String): String =
     s"pow((a.u1 $sign b.u1)/2.0, 2) + pow((a.u2 $sign b.u2)/2.0, 2)"
 
-  private def kernQ(name: String, value: Column, valueSql: String,
+  private def kernQ(name: String, value: => Column, valueSql: => String,
                     out: String): Q = Q(name,
     (s, d) => supPoints(s, d, "a")
       .crossJoin(broadcast(supPoints(s, d, "b")))
@@ -311,29 +307,30 @@ object OracleQueries {
   // with m=2 fixed inducing points z=[(0,0),(1,1)], lengthscale 2. The
   // Spark side runs the real SparseGP per-partition gram/gemm kernel;
   // the SQL literals (Lm⁻¹ entries) are generated from the same Breeze
-  // Cholesky at query-build time, so both sides share identical
-  // constants to full double precision.
-  private val gpNystrom: Q = {
+  // Cholesky, so both sides share identical constants to full double
+  // precision. Built on first use: registering the query loads no
+  // Breeze.
+  private lazy val nystromGp: graft.gp.SparseGP = {
     import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
-    val zfix = BDM((0.0, 0.0), (1.0, 1.0))
-    val sgp = new graft.gp.SparseGP(
-      graft.gp.Kernels.UnitRBF(BDV(2.0)), zfix)
-    val li = sgp.lmInv // [2,2] lower-tri inverse
-    def lit17(v: Double): String = "%.17g".format(v)
-    val k1Sql = "exp(-0.5*(pow(u1/2.0, 2) + pow(u2/2.0, 2)))"
-    val k2Sql = "exp(-0.5*(pow((u1 - 1.0)/2.0, 2) + pow((u2 - 1.0)/2.0, 2)))"
-    Q("q_gp_nystrom",
-      (s, d) => {
-        val pts = table(s, d, "supplier").select(
-          col("s_nationkey"),
-          (col("s_acctbal") / lit(1000.0)).as("u1"),
-          (col("s_suppkey") % 7).cast("double").as("u2"))
-        sgp.nystromResidualColumn(pts, Seq("u1", "u2"))
-          .groupBy("s_nationkey")
-          .agg(count(lit(1)).as("n"),
-            round(avg(col("gp_resid")), 5).as("avg_resid"))
-          .orderBy("s_nationkey")
-      },
+    new graft.gp.SparseGP(graft.gp.Kernels.UnitRBF(BDV(2.0)),
+      BDM((0.0, 0.0), (1.0, 1.0)))
+  }
+  private val gpNystrom = Q("q_gp_nystrom",
+    (s, d) => {
+      val pts = table(s, d, "supplier").select(
+        col("s_nationkey"),
+        (col("s_acctbal") / lit(1000.0)).as("u1"),
+        (col("s_suppkey") % 7).cast("double").as("u2"))
+      nystromGp.nystromResidualColumn(pts, Seq("u1", "u2"))
+        .groupBy("s_nationkey")
+        .agg(count(lit(1)).as("n"),
+          round(avg(col("gp_resid")), 5).as("avg_resid"))
+        .orderBy("s_nationkey")
+    }, {
+      val li = nystromGp.lmInv // [2,2] lower-tri inverse
+      def lit17(v: Double): String = "%.17g".format(v)
+      val k1Sql = "exp(-0.5*(pow(u1/2.0, 2) + pow(u2/2.0, 2)))"
+      val k2Sql = "exp(-0.5*(pow((u1 - 1.0)/2.0, 2) + pow((u2 - 1.0)/2.0, 2)))"
       "WITH pts AS (SELECT s_nationkey, s_acctbal/1000.0 AS u1, " +
         "cast(s_suppkey % 7 AS DOUBLE) AS u2 FROM supplier), " +
         s"t AS (SELECT s_nationkey, $k1Sql AS k1, $k2Sql AS k2 FROM pts), " +
@@ -341,8 +338,8 @@ object OracleQueries {
         s"(${lit17(li(1, 0))})*k1 + (${lit17(li(1, 1))})*k2 AS w2 FROM t) " +
         "SELECT s_nationkey, count(*) AS n, " +
         "round(avg(1.0 - (w1*w1 + w2*w2)), 5) AS avg_resid " +
-        "FROM w GROUP BY s_nationkey ORDER BY s_nationkey")
-  }
+        "FROM w GROUP BY s_nationkey ORDER BY s_nationkey"
+    })
 
   // ------------------------------------------------------------ KL / MVN
 
@@ -429,7 +426,7 @@ object OracleQueries {
 
   // ---------------------------------------------------------------- export
 
-  val all: Vector[Q] = Vector(
+  val all: Seq[Q] = Seq(
     densGaussian, densLognormal, densBernoulli, densPoisson, densExponential,
     densGamma, densStudentT, densBeta, densLaplace, densBimixture,
     transExp, transLog1pe, transLogistic,
@@ -438,9 +435,4 @@ object OracleQueries {
     kernSqdist, kernRbf, kernCsym, kernMatern32, kernMatern52, kernRq,
     kernPeriodic, kernLinear, kernCsymDiag, gpNystrom,
     klDiagNormal, mvnLogp, modelLoglik, densHierJoin, splitCount)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    all.map(q => q.name -> q.spark).toMap
-  val oracleSql: Map[String, String] =
-    all.map(q => q.name -> q.sql).toMap
 }

@@ -19,16 +19,17 @@ object SparkEntry {
       (n, v.qMu.value(0), math.exp(v.qSqrt.value(0)), last)
     }.toDF("param", "post_mean", "post_scale", "elbo")
   }
-  /** One entry per implemented operator from SURVEY.md §2 (+ the
-    * beyond-reference pipeline operators). */
+  /** Every registered query, family by family: one entry per
+    * implemented operator from SURVEY.md §2 (+ the beyond-reference
+    * pipeline operators). */
+  private[graft] def registry: Seq[Q] =
+    OracleQueries.all ++ DedupQueries.all ++ EmbedQueries.all ++
+      TextQueries.all ++ MultimodalQueries.all ++ SamplingQueries.all ++
+      CurationQueries.all ++ StatsQueries.all ++ EventQueries.all
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    OracleQueries.queries ++
-      (PipelineQueries.all ++ EventQueries.all)
-        .map(q => q.name -> q.spark).toMap
+    registry.map(q => q.name -> q.spark).toMap
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    OracleQueries.oracleSql ++
-      (PipelineQueries.all ++ EventQueries.all)
-        .map(q => q.name -> q.sql).toMap
+    registry.map(q => q.name -> q.sql).toMap
 }

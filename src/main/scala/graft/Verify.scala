@@ -27,8 +27,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // dev loop: SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = graft.ops.PlanHints.namesFromEnv("SPARK_GRAFT_ONLY")
     val todo = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toVector.sortBy(_._1)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.examples.DistProbe"` */
 object DistProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.ops.PlanHints.sfDirFromEnv()
     val spark = graft.LocalSpark.session(32)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select(((col("l_quantity") - 25.5) / 14.4).as("x"),

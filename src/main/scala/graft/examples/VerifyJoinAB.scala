@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   * Usage: `runMain graft.examples.VerifyJoinAB [plan <file>]` */
 object VerifyJoinAB {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.ops.PlanHints.sfDirFromEnv()
     val spark = graft.LocalSpark.session(32)
-    val rec = graft.PipelineQueries.dirtyCustomers(spark, sfDir)
+    val rec = graft.QueryKit.dirtyCustomers(
+      graft.QueryKit.typoCustomers(spark, sfDir))
     // the input to the size gate in Entity.verifiedEdges
     val nameBytes = rec.select(col("rid"), col("name"))
       .queryExecution.optimizedPlan.stats.sizeInBytes

@@ -27,11 +27,6 @@ final class GP(val kern: Kernel) extends Serializable {
     require(u.cols == x.rows, s"u cols ${u.cols} != n ${x.rows}")
     u * kern.choleskyK(x).t
   }
-
-  /** Batched form: per batch element. */
-  def samplesBatch(xs: Seq[DenseMatrix[Double]],
-                   us: Seq[DenseMatrix[Double]]): Seq[DenseMatrix[Double]] =
-    xs.zip(us).map { case (x, u) => samples(x, u) }
 }
 
 object SparseGP {

@@ -34,8 +34,6 @@ sealed trait Kernel extends Serializable {
     * tiles through tf batch ops; semantics identical). */
   final def kBatch(xs: Seq[DenseMatrix[Double]]): Seq[DenseMatrix[Double]] =
     xs.map(k(_))
-  final def choleskyKBatch(xs: Seq[DenseMatrix[Double]]): Seq[DenseMatrix[Double]] =
-    xs.map(choleskyK(_))
 }
 
 /** A kernel parameterized by a positive scalar-or-ARD lengthscale

@@ -101,20 +101,6 @@ object Dedup {
       .select((col(idCol) +: keep.map(col)) ++ sigs: _*)
   }
 
-  /** LSH banding: one row per (doc, band) with the band key — docs
-    * sharing a band key are candidate duplicates. `numBands` trades
-    * recall (more bands → more, looser buckets) against precision and
-    * must divide [[NumPerms]]. */
-  def lshBands(sigs: DataFrame, idCol: String,
-               numBands: Int = NumBands): DataFrame =
-    // thin projection over the ONE band_key encoding
-    // ([[bandRowsFromSigs]]) — a second hand-rolled encoding here
-    // could drift from the contract the band joins rely on;
-    // the explode form also reads the signature frame once, not
-    // numBands times
-    bandRowsFromSigs(sigs, idCol, numBands)
-      .select(col(idCol), col("band"), col("band_key"))
-
   /** Band rows over a PRE-COMPUTED signature frame — lets callers that
     * already hold (possibly cached) signatures avoid re-running the
     * tokenize+hash kernel per consumer. */
@@ -1360,17 +1346,6 @@ object Dedup {
       array_distinct(wordNgrams(textB, n)))
     size(array_intersect(ga, gb)).cast("double") /
       size(array_union(ga, gb)).cast("double")
-  }
-
-  /** Asymmetric n-gram containment C(A→B) = |g(A) ∩ g(B)| / |g(A)| —
-    * near 1 when A is an EXCERPT of B however long B is, which
-    * symmetric Jaccard misses (a paragraph quoted inside a book pair
-    * scores J ≈ |A|/|B| ≈ 0). The sub/superset-duplicate detector;
-    * score over candidate pairs, never all-pairs. */
-  def ngramContainment(textA: Column, textB: Column, n: Int): Column = {
-    val (ga, gb) = (array_distinct(wordNgrams(textA, n)),
-      array_distinct(wordNgrams(textB, n)))
-    size(array_intersect(ga, gb)).cast("double") / size(ga).cast("double")
   }
 
   /** Symmetric containment max(C(A→B), C(B→A)) = |∩| / min(|g(A)|,

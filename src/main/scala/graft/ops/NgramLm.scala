@@ -93,8 +93,8 @@ object NgramLm {
     * post-aggregation keys; N is a one-row frame joined in-plan; the
     * top-k is ONE bounded [[TopK]] aggregate keyed by the pair
     * fingerprint; spellings are recovered AFTER selection by one
-    * map pass probing the broadcast k-row winner set (the
-    * [[graft.PipelineQueries]] vocab trick). All counts integers ⇒
+    * map pass probing the broadcast k-row winner set (the q_text_vocab
+    * trick in [[graft.TextQueries]]). All counts integers ⇒
     * every pmi double and the selected set are engine-exact.
     *
     * Returns (rank, spelling, cp, pmi) for the k winners, ranked

@@ -50,6 +50,17 @@ object PlanHints {
     longFromEnv(name, default, 1L, Int.MaxValue,
       "a positive integer", env).toInt
 
+  /** The table directory the mains read: `SPARK_GRAFT_SF_DIR`, or the
+    * sf0.1 test data when it is unset. */
+  def sfDirFromEnv(env: Map[String, String] = sys.env): String =
+    env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** A dev-loop name filter: the comma list in `name`, each entry
+    * trimmed, or None when it is unset. */
+  def namesFromEnv(name: String,
+                   env: Map[String, String] = sys.env): Option[Set[String]] =
+    env.get(name).map(_.split(",").map(_.trim).toSet)
+
   /** Mark `c` non-nullable. ONLY valid immediately downstream of an
     * explicit `c.isNotNull` filter (KnownNotNull is a pass-through
     * with no runtime check — a null slipping past the contract would

@@ -194,10 +194,6 @@ object UnifiedDiff {
     Stats(h, a, d)
   }
 
-  /** UTF-8 convenience twins for blob-columned frames. */
-  def buildBytes(oldText: String, newText: String): Array[Byte] =
-    build(split(oldText), split(newText)).getBytes(UTF_8)
-
   def split(text: String): Vector[String] =
     if (text.isEmpty) Vector.empty else text.split("\n", -1).toVector
 

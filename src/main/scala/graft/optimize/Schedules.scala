@@ -24,12 +24,4 @@ object Schedules {
         floor + 0.5 * (peak - floor) * (1.0 + math.cos(math.Pi * t))
       }
   }
-
-  /** Step decay: lr = peak · factor^⌊step/every⌋. */
-  def stepDecay(peak: Double, every: Int,
-                factor: Double = 0.5): Int => Double = {
-    require(peak > 0 && every > 0 && factor > 0 && factor <= 1.0,
-      s"bad schedule ($peak,$every,$factor)")
-    step => peak * math.pow(factor, (step / every).toDouble)
-  }
 }

@@ -25,7 +25,7 @@ object PlanStats {
     require(args.length == 1,
       "usage: PlanStats <tag>  (writes plans/<tag>/PLANSTATS.tsv)")
     val tag = args(0)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.ops.PlanHints.sfDirFromEnv()
     val spark = graft.LocalSpark.session(4)
     val sb = new StringBuilder
     sb.append(("query" +: ShapeCols.map(_._1)).mkString("\t") + "\n")

@@ -48,7 +48,7 @@ object Probe {
       else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val log = logPath.map(p => new java.io.PrintWriter(p, "UTF-8"))
     def out(line: String): Unit = { println(line); log.foreach(_.println(line)) }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = graft.ops.PlanHints.sfDirFromEnv()
     try {
       val spark = LocalSpark.session(
         graft.ops.PlanHints.countFromEnv("SPARK_GRAFT_CPUS", 32))

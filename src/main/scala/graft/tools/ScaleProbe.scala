@@ -2,12 +2,15 @@ package graft.tools
 
 /** Two-point scaling probe (round-7 judge ask #1): times the heaviest
   * SparkEntry queries at sf0.1 and at the GenScale-synthesized 10×
-  * dataset, and writes SCALING_r7.json with per-query times and the
+  * dataset, and writes `<out.json>` with per-query times and the
   * sf1/sf0.1 ratio. A query that scales near-linearly in the grown
   * tables should land ≲ its input growth factor (10× for documents/
   * events consumers, 4× for embeddings consumers) plus fixed
   * overhead; anything well beyond that is a scale bug or gets an
-  * explicit weak mark. */
+  * explicit weak mark.
+  *
+  * Usage: `runMain graft.tools.ScaleProbe <small-dir> <big-dir>
+  * <out.json> [doc-factor] [emb-factor] [skip,list] [reason...]` */
 object ScaleProbe {
 
   /** (query, grown input factor) — the factor the query's DOMINANT
@@ -202,9 +205,11 @@ object ScaleProbe {
     "q_pipeline_extract" -> 10)
 
   def main(args: Array[String]): Unit = {
-    val sfSmall = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val sfBig = if (args.length > 1) args(1) else "/tmp/sfdata/sf1"
-    val out = if (args.length > 2) args(2) else "SCALING_r7.json"
+    // no default output: a bare run must not overwrite a committed
+    // SCALING_*.json
+    require(args.length >= 3, "usage: ScaleProbe <small-dir> <big-dir> " +
+      "<out.json> [doc-factor] [emb-factor] [skip,list] [reason...]")
+    val Array(sfSmall, sfBig, out) = args.take(3)
     // actual growth factors of the big dir (docs/events, embeddings) —
     // scale the per-query nominal (10, 4) factors for e.g. a 100x run
     val docFactor = if (args.length > 3) args(3).toDouble else 10.0
@@ -236,8 +241,7 @@ object ScaleProbe {
     } finally graft.core.CacheRegistry.drain()
 
     // dev loop: SPARK_GRAFT_PROBE_ONLY=q_a,q_b probes just those
-    val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = graft.ops.PlanHints.namesFromEnv("SPARK_GRAFT_PROBE_ONLY")
     val rows = Probes.flatMap { case (q, nominal) =>
       if (!only.forall(_.contains(q))) None
       else if (skip.contains(q)) { println(s"$q SKIPPED: ${skip(q)}"); None }

@@ -4,31 +4,55 @@ import graft.ops.PlanHints
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Configuration hygiene: production paths read no JVM-global switch,
-  * and a malformed size or count knob fails with a message that
-  * names it. */
+  * every environment knob is parsed in PlanHints, and a malformed
+  * size or count knob fails with a message that names it. */
 class KnobsSpec extends AnyFunSuite {
 
-  test("no production path reads a system property (examples/ and " +
-    "tools/ mains may)") {
+  /** `file:line` of every line under src/main/scala matching `read`,
+    * in the files `scan` keeps (paths relative to src/main/scala). */
+  private def reads(read: scala.util.matching.Regex,
+                    scan: String => Boolean): List[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
-    val read = "sys\\.props|System\\.getPropert".r
     val walk = java.nio.file.Files.walk(root)
     val scanned = try walk.iterator().asScala.map(root.relativize(_).toString)
-      .filter(rel => rel.endsWith(".scala") &&
-        !rel.startsWith("graft/examples/") && !rel.startsWith("graft/tools/"))
+      .filter(rel => rel.endsWith(".scala") && scan(rel))
       .toList
     finally walk.close()
     // a wrong working directory must not pass vacuously
     assert(scanned.contains("graft/ops/Dedup.scala"))
-    val offenders = scanned.flatMap { rel =>
+    scanned.flatMap { rel =>
       val src = scala.io.Source.fromFile(root.resolve(rel).toFile, "UTF-8")
       try src.getLines().zipWithIndex.collect {
         case (line, i) if read.findFirstIn(line).isDefined => s"$rel:${i + 1}"
       }.toList
       finally src.close()
     }
+  }
+
+  test("no production path reads a system property (examples/ and " +
+    "tools/ mains may)") {
+    val offenders = reads("sys\\.props|System\\.getPropert".r, rel =>
+      !rel.startsWith("graft/examples/") && !rel.startsWith("graft/tools/"))
     assert(offenders.isEmpty, offenders.mkString("system property reads: ", ", ", ""))
+  }
+
+  test("no main or operator reads an environment variable outside the " +
+    "PlanHints readers") {
+    val offenders = reads("sys\\.env|System\\.getenv".r,
+      _ != "graft/ops/PlanHints.scala")
+    assert(offenders.isEmpty,
+      offenders.mkString("environment reads: ", ", ", ""))
+  }
+
+  test("sfDirFromEnv and namesFromEnv: the default or None when unset, " +
+    "the value when set") {
+    assert(PlanHints.sfDirFromEnv(Map.empty).endsWith("/sf0.1"))
+    assert(PlanHints.sfDirFromEnv(Map("SPARK_GRAFT_SF_DIR" -> "/d")) == "/d")
+    val knob = "SPARK_GRAFT_TEST_ONLY"
+    assert(PlanHints.namesFromEnv(knob, Map.empty).isEmpty)
+    assert(PlanHints.namesFromEnv(knob, Map(knob -> "q_a, q_b ,q_c")) ==
+      Some(Set("q_a", "q_b", "q_c")))
   }
 
   test("bytesFromEnv: default when unset, the value when well-formed, " +
