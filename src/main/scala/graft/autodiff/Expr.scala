@@ -19,7 +19,10 @@ import graft.functions.MathFns
   *             fixed within a step, refreshed between steps)
   *
   * The tape is compiled with structural CSE, so repeated sub-expressions
-  * (e.g. a shared `exp(q_sqrt)`) evaluate once per row.
+  * evaluate once per row. The row log-likelihood is also hoisted
+  * ([[CompiledExpr.hoist]]): its subtrees over θ and draws alone (e.g.
+  * every reparameterized sample `μ + exp(s)·u`) evaluate once per step,
+  * and the row tape reads their values as its parameters.
   */
 sealed trait Expr {
   def +(o: Expr): Expr = Add(this, o)
@@ -215,7 +218,85 @@ object CompiledExpr {
   final val OpSin = 20; final val OpCos = 21
 
   /** Compile with structural common-subexpression elimination. */
-  def compile(e: Expr, nIn: Int, nSlots: Int, nDraws: Int): CompiledExpr = {
+  def compile(e: Expr, nIn: Int, nSlots: Int, nDraws: Int): CompiledExpr =
+    build(e, nIn, nSlots, nDraws)._1
+
+  /** Split a row objective at its θ boundary. Each maximal subtree that
+    * holds a [[P]] or [[Dr]] leaf and no [[In]] leaf is cut out as slot
+    * `b` of a smaller row tape, which reads the slot values B as its θ
+    * (and no draws); structurally equal subtrees share one slot. The
+    * head tape `Σ_b In(b)·boundary_b` over the real θ and draws computes
+    * B once per step and chains the rows' summed ∂ℓ/∂B back to θ. Row
+    * values are bit-identical to [[compile]]'s tape; gradients differ
+    * only in summation order. */
+  def hoist(e: Expr, nIn: Int, nSlots: Int, nDraws: Int): HoistedExpr = {
+    // bit 1: holds an In leaf; bit 2: holds a P or Dr leaf
+    val kinds = new java.util.IdentityHashMap[Expr, Integer]()
+    def kind(x: Expr): Int = {
+      val got = kinds.get(x)
+      if (got != null) got.intValue
+      else {
+        val k = x match {
+          case _: In => 1
+          case _: P | _: Dr => 2
+          case _: Const => 0
+          case _ => children(x).foldLeft(0)(_ | kind(_))
+        }
+        kinds.put(x, k); k
+      }
+    }
+    val slotOf = scala.collection.mutable.LinkedHashMap.empty[Expr, Int]
+    val cuts = new java.util.IdentityHashMap[Expr, Expr]()
+    def cut(x: Expr): Expr = {
+      val got = cuts.get(x)
+      if (got != null) got
+      else {
+        val r =
+          if (kind(x) == 2) P(slotOf.getOrElseUpdate(x, slotOf.size))
+          else mapChildren(x, cut)
+        cuts.put(x, r); r
+      }
+    }
+    val row = compile(cut(e), nIn, slotOf.size, 0)
+    val bounds = slotOf.keys.toIndexedSeq
+    // a balanced sum keeps the head's depth logarithmic in the slots
+    def sum(lo: Int, hi: Int): Expr =
+      if (hi - lo == 1) In(lo) * bounds(lo)
+      else { val mid = (lo + hi) >>> 1; sum(lo, mid) + sum(mid, hi) }
+    val (head, index) = build(if (bounds.isEmpty) Expr.zero
+      else sum(0, bounds.length), bounds.length, nSlots, nDraws)
+    new HoistedExpr(row, head, bounds.map(index).toArray)
+  }
+
+  private def children(x: Expr): Iterator[Expr] = x match {
+    case p: Product => p.productIterator.collect { case c: Expr => c }
+  }
+
+  private def mapChildren(x: Expr, f: Expr => Expr): Expr = x match {
+    case Add(a, b) => Add(f(a), f(b))
+    case Sub(a, b) => Sub(f(a), f(b))
+    case Mul(a, b) => Mul(f(a), f(b))
+    case Div(a, b) => Div(f(a), f(b))
+    case Lse2(a, b) => Lse2(f(a), f(b))
+    case Neg(a) => Neg(f(a))
+    case ExpE(a) => ExpE(f(a))
+    case LogE(a) => LogE(f(a))
+    case SqrtE(a) => SqrtE(f(a))
+    case AbsE(a) => AbsE(f(a))
+    case PowC(a, k) => PowC(f(a), k)
+    case Sigmoid(a) => Sigmoid(f(a))
+    case Softplus(a) => Softplus(f(a))
+    case TanhE(a) => TanhE(f(a))
+    case Relu(a) => Relu(f(a))
+    case LgammaE(a) => LgammaE(f(a))
+    case SinE(a) => SinE(f(a))
+    case CosE(a) => CosE(f(a))
+    case leaf @ (_: Const | _: In | _: P | _: Dr) => leaf
+  }
+
+  /** The tape of `e` and the tape index of each of its subexpressions. */
+  private def build(e: Expr, nIn: Int, nSlots: Int, nDraws: Int)
+      : (CompiledExpr, scala.collection.Map[Expr, Int]) = {
     val index = scala.collection.mutable.HashMap.empty[Expr, Int]
     val ops = scala.collection.mutable.ArrayBuffer.empty[Int]
     val c0 = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -254,7 +335,33 @@ object CompiledExpr {
     })
 
     val root = go(e)
-    new CompiledExpr(ops.toArray, c0.toArray, c1.toArray, consts.toArray,
-      inIdx.toArray, nIn, nSlots, nDraws, root)
+    (new CompiledExpr(ops.toArray, c0.toArray, c1.toArray, consts.toArray,
+      inIdx.toArray, nIn, nSlots, nDraws, root), index)
   }
+}
+
+/** A row objective cut at its θ boundary ([[CompiledExpr.hoist]]).
+  * `row` reads one data row as its inputs and the slot values B as its
+  * θ; `head` holds every boundary subtree over the real θ and draws, and
+  * `slotNodes(b)` is slot b's node in it. */
+final class HoistedExpr private[autodiff] (
+    val row: CompiledExpr, val head: CompiledExpr,
+    slotNodes: Array[Int]) extends Serializable {
+
+  /** Number of slots: the length of B and of ∂ℓ/∂B. */
+  def nB: Int = slotNodes.length
+
+  /** The slot values B for one (θ, draws). */
+  def slots(theta: Array[Double], draws: Array[Double]): Array[Double] = {
+    val vals = head.newValues
+    head.eval(new Array[Double](nB), theta, draws, vals)
+    slotNodes.map(vals)
+  }
+
+  /** Adds `Σ_b gradB(b)·∂B_b/∂θ` into `gradTheta` and, if non-null, the
+    * same over draws into `gradDraws`. */
+  def chain(gradB: Array[Double], theta: Array[Double], draws: Array[Double],
+            gradTheta: Array[Double], gradDraws: Array[Double] = null): Unit =
+    head.evalGrad(gradB, theta, draws, head.newValues, head.newValues,
+      gradTheta, gradDraws)
 }

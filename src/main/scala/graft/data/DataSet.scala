@@ -86,24 +86,34 @@ final class DataSet(df: DataFrame, seed: Long = 0L,
         preservesPartitioning = true)
   }
 
-  /** Exactly the rows of `trainVectors(cols)` (or `testVectors`)
-    * `.sample(withReplacement = true, frac, seed)`, in the same order
-    * and partitions, as row-major blocks. Mirrors
-    * `PartitionwiseSampledRDD`: partition seeds are the successive
-    * `nextLong`s of `java.util.Random(seed)`, and one `PoissonSampler`
-    * per partition draws one count per row position across all of the
-    * partition's blocks. */
+  /** For each of `seeds`, exactly the rows of `trainVectors(cols)` (or
+    * `testVectors`) `.sample(withReplacement = true, frac, seed)`, in
+    * the same order and partitions, as row-major blocks tagged with the
+    * seed's index — every seed in one pass over the persisted blocks.
+    * Mirrors `PartitionwiseSampledRDD`: partition seeds are the
+    * successive `nextLong`s of `java.util.Random(seed)`, and one
+    * `PoissonSampler` per seed and partition draws one count per row
+    * position across all of the partition's blocks. */
   def sampleBlocks(cols: Seq[String], training: Boolean, frac: Double,
-                   seed: Long): RDD[Array[Double]] = {
+                   seeds: Seq[Long]): RDD[(Int, Array[Double])] = {
     require(frac >= 0.0, s"Fraction must be nonnegative, but got $frac")
     val src = blocks(cols, training)
-    val rnd = new java.util.Random(seed)
-    val seeds = Array.fill(src.getNumPartitions)(rnd.nextLong())
+    val partSeeds = seeds.map { s =>
+      val rnd = new java.util.Random(s)
+      Array.fill(src.getNumPartitions)(rnd.nextLong())
+    }.toArray
     val stride = DataSet.stride(cols.length)
     src.mapPartitionsWithIndex({ (p, in) =>
-      val sampler = new PoissonSampler[Any](frac)
-      sampler.setSeed(seeds(p))
-      new DataSet.Gather(in, stride, sampler)
+      // one seed streams the partition; several walk its blocks, read
+      // once, one seed after another
+      val passes =
+        if (partSeeds.length == 1) Iterator.single(in)
+        else { val bs = in.toArray; Iterator.fill(partSeeds.length)(bs.iterator) }
+      passes.zipWithIndex.flatMap { case (bs, j) =>
+        val sampler = new PoissonSampler[Any](frac)
+        sampler.setSeed(partSeeds(j)(p))
+        new DataSet.Gather(bs, stride, sampler).map(b => (j, b))
+      }
     }, preservesPartitioning = true)
   }
 
@@ -144,10 +154,13 @@ object DataSet {
   /** THE seed keying for batch sampling — one home for the
     * train/test stream split (7919-keyed steps; the 104729 offset
     * selects the test stream). Shared by [[DataSet.minibatch]],
-    * [[DataSet.testBatch]], and every Elbo batch path, so the
-    * "crossing an execution-path boundary never changes which rows
-    * an evaluation sees" contract is structural, not convention
-    * (a third hand-copied variant is exactly how it drifted once). */
+    * [[DataSet.testBatch]], and every Elbo batch path, so every path
+    * keys a step's batch the same way. Only the keying is shared, not
+    * the rows: the driver-local path draws `minibatchSize` indices
+    * with `scala.util.Random`, the block path draws per-partition
+    * Poisson counts (so its batch depends on the partition count), and
+    * the augmented path samples the DataFrame, whose `SampleExec`
+    * Poisson sampler does no gap sampling. */
   def sampleSeed(seed: Long, step: Int, training: Boolean): Long =
     seed + 7919L * (step + 1) + (if (training) 0L else 104729L)
 

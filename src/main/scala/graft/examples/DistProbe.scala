@@ -55,7 +55,7 @@ object DistProbe {
         ms(vecs.sample(withReplacement = true, frac, 1234L + s)
           .collect().length),
         ms(DataSet.allRows(d.sampleBlocks(cols, training = true, frac,
-          1234L + s).collect(), cols.length).length)))
+          Seq(1234L + s)).values.collect(), cols.length).length)))
       val (rowsMs, blockMs) = runs.unzip
       for (((n, r), (m, bl)) <- runs) {
         require(n == m, s"row and block samples differ: $n vs $m rows")

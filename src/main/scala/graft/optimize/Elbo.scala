@@ -14,10 +14,15 @@ import graft.data.DataSet
   * step draws fresh reparameterization noise, samples a minibatch, and
   * updates the selected parameter collection.
   *
-  * Execution model (SURVEY §4): per-row (logp, ∇logp) evaluate inside
-  * `treeAggregate` against a per-step broadcast θ — partial Breeze-style
-  * accumulators per partition, tree-reduced; the KL term and its
-  * gradient evaluate on the driver (param-sized). This is exactly the
+  * Execution model (SURVEY §4): the row log-likelihood is hoisted
+  * ([[graft.autodiff.CompiledExpr.hoist]]). Each step evaluates its
+  * subtrees over θ and draws alone once on the driver, into slot values
+  * B — as the reference draws its reparameterized sample once per
+  * `session.run` and broadcasts it over the minibatch. Per-row (logp,
+  * ∂logp/∂B) evaluate inside `treeAggregate` against B — partial
+  * accumulators per partition, tree-reduced — and one reverse pass of
+  * the hoisted head chains Σ ∂logp/∂B back to ∇θ on the driver; the KL
+  * term and its gradient evaluate there too (param-sized). This is the
   * MLlib `LogisticRegression` scaling pattern: no driver-side data, no
   * shuffle, O(params) driver state — it holds unchanged at 100 TB /
   * 1000 executors.
@@ -83,8 +88,10 @@ final class Elbo(
   private[optimize] val ctx = new Elbo.Ctx(inputCols, offsets, drawOffsets,
     nameOf, vnameOf)
 
-  private val rowTape: CompiledExpr =
-    CompiledExpr.compile(loglik(ctx), inputCols.length, nSlots, nDraws)
+  /** The row log-likelihood cut at its θ boundary: the row tape reads
+    * the slot values B that the head computes once per step. */
+  private val rowHoist: HoistedExpr =
+    CompiledExpr.hoist(loglik(ctx), inputCols.length, nSlots, nDraws)
   private val klTape: CompiledExpr =
     CompiledExpr.compile(Expr.sum(varSeq.map { case (n, v) => ctx.klExpr(v) }),
       0, nSlots, nDraws)
@@ -136,18 +143,31 @@ final class Elbo(
   @transient private lazy val localTest: Array[Array[Double]] =
     dataset.localTest(inputCols)
 
-  /** Driver-local Σ (logp, ∇logp) — multithreaded chunked tape walk. */
-  private def localGrad(rows: Array[Array[Double]], idx: Array[Int],
-                        theta: Array[Double], draws: Array[Double])
+  /** Σ (logp, ∇θ logp, rows) of one evaluation: the slot values B once
+    * from (θ, draws), the rows' (Σ logp, Σ ∂logp/∂B, count) from
+    * `rowsGrad`, and one chain back through the head to ∂θ. */
+  private def hoistedGrad(theta: Array[Double], draws: Array[Double])(
+      rowsGrad: Array[Double] => (Double, Array[Double], Long))
       : (Double, Array[Double], Long) = {
+    val b = rowHoist.slots(theta, draws)
+    val (loss, gradB, cnt) = rowsGrad(b)
+    val grad = new Array[Double](nSlots)
+    rowHoist.chain(gradB, theta, draws, grad)
+    (loss, grad, cnt)
+  }
+
+  /** Driver-local Σ (logp, ∂logp/∂B) — multithreaded chunked walk of the
+    * row tape. */
+  private def localGrad(rows: Array[Array[Double]], idx: Array[Int],
+                        b: Array[Double]): (Double, Array[Double], Long) = {
     val n = if (idx == null) rows.length else idx.length
     val nThreads = math.min(Runtime.getRuntime.availableProcessors(),
       math.max(1, n / 2048))
     val chunk = (n + nThreads - 1) / math.max(1, nThreads)
     val losses = new Array[Double](nThreads)
     val grads = new Array[Array[Double]](nThreads)
-    val nS = nSlots
-    val tape = rowTape
+    val nB = b.length
+    val tape = rowHoist.row
     java.util.stream.IntStream.range(0, nThreads).parallel().forEach { t =>
       // per-thread scratch via the same thread-local the distributed
       // path uses — fresh newValues pairs here were tape-sized garbage
@@ -156,67 +176,62 @@ final class Elbo(
       // allocated by its worker, so each thread's accumulator sits in
       // that thread's allocation buffer: back-to-back arrays from one
       // thread shared cache lines, and every row's write contended
-      val g = new Array[Double](nS)
+      val g = new Array[Double](nB)
       grads(t) = g
       var l = 0.0
       var i = t * chunk
       val end = math.min(n, (t + 1) * chunk)
       while (i < end) {
         val row = if (idx == null) rows(i) else rows(idx(i))
-        l += tape.evalGradFast(row, theta, draws, sc.vals, sc.adj, g)
+        l += tape.evalGradFast(row, b, Elbo.NoDraws, sc.vals, sc.adj, g)
         i += 1
       }
       losses(t) = l
     }
-    val grad = new Array[Double](nSlots)
+    val grad = new Array[Double](nB)
     var t = 0
     while (t < nThreads) {
       var i = 0
-      while (i < nSlots) { grad(i) += grads(t)(i); i += 1 }
+      while (i < nB) { grad(i) += grads(t)(i); i += 1 }
       t += 1
     }
     (losses.sum, grad, n.toLong)
   }
 
-  /** Distributed Σ over rows of (logp, ∇logp) via treeAggregate — the
-    * MLlib pattern: per-partition partial accumulators against a
-    * per-step broadcast θ, tree-reduced. Each element of `blocks` is a
+  /** Distributed Σ over rows of (logp, ∂logp/∂B) via treeAggregate —
+    * the MLlib pattern: per-partition partial accumulators against the
+    * step's slot values B, tree-reduced. Each element of `blocks` is a
     * row-major block of input rows ([[graft.data.DataSet.pack]]),
     * folded whole per `seqOp` call into one mutable accumulator per
     * partition. */
   private def rddGrad(blocks: org.apache.spark.rdd.RDD[Array[Double]],
-                      theta: Array[Double], draws: Array[Double])
-      : (Double, Array[Double], Long) = {
-    val tape = rowTape
-    val nS = nSlots
+                      b: Array[Double]): (Double, Array[Double], Long) = {
+    val tape = rowHoist.row
     val width = inputCols.length
     val stride = DataSet.stride(width)
     val sc = blocks.sparkContext
-    // small θ rides in the task closure (one serialization, no
+    // small B rides in the task closure (one serialization, no
     // broadcast create/destroy round-trip per step); broadcast only
-    // pays off once θ is large enough that per-task re-send hurts
-    val useBroadcast = nSlots + nDraws > 65536
-    val bTheta = if (useBroadcast) sc.broadcast(theta) else null
-    val bDraws = if (useBroadcast) sc.broadcast(draws) else null
-    val cTheta = if (useBroadcast) null else theta
-    val cDraws = if (useBroadcast) null else draws
+    // pays off once B is large enough that per-task re-send hurts
+    val useBroadcast = b.length > 65536
+    val bB = if (useBroadcast) sc.broadcast(b) else null
+    val cB = if (useBroadcast) null else b
     val depth = math.max(2, (math.log(math.max(blocks.getNumPartitions, 2)) /
       math.log(4)).ceil.toInt)
     val acc =
-      try blocks.treeAggregate(new Elbo.GradAcc(nS))(
+      try blocks.treeAggregate(new Elbo.GradAcc(b.length))(
         seqOp = (acc, block) => {
           // scratch arrays reused via thread-local: allocation-free over
           // millions of rows; each row is copied into the tape's input
           val scratch = Elbo.scratchFor(tape)
-          val th = if (cTheta != null) cTheta else bTheta.value
-          val dr = if (cDraws != null) cDraws else bDraws.value
+          val slots = if (cB != null) cB else bB.value
           val in = scratch.in
           var l = acc.loss
           var off = 0
           while (off < block.length) {
             System.arraycopy(block, off, in, 0, width)
-            l += tape.evalGradFast(in, th, dr, scratch.vals, scratch.adj,
-              acc.grad)
+            l += tape.evalGradFast(in, slots, Elbo.NoDraws, scratch.vals,
+              scratch.adj, acc.grad)
             off += stride
           }
           acc.loss = l
@@ -224,7 +239,7 @@ final class Elbo(
           acc
         },
         combOp = (a, b) => a.merge(b), depth)
-      finally if (useBroadcast) { bTheta.destroy(); bDraws.destroy() }
+      finally if (useBroadcast) bB.destroy()
     (acc.loss, acc.grad, acc.count)
   }
 
@@ -246,18 +261,20 @@ final class Elbo(
     loss * scale - kl
   }
 
-  /** A minibatch of about `minibatchSize` rows of a split, sampled from
-    * its persisted blocks by the step's seed. ONE keying for every path
-    * — graft.data.DataSet.sampleSeed — so crossing the localThreshold
-    * boundary (or the augment boundary) never changes which rows an
-    * evaluation sees. No 1.0 cap: with replacement, fraction > 1 is
-    * valid and a batch larger than the split delivers that many draws. */
-  private def sampledBlocks(minibatchSize: Int, step: Int, training: Boolean)
-      : org.apache.spark.rdd.RDD[Array[Double]] = {
+  /** For each of `steps`, a minibatch of about `minibatchSize` rows of a
+    * split, sampled from its persisted blocks by the step's seed and
+    * tagged with the step's index in `steps` — all in one pass. Every
+    * path keys a step's batch by graft.data.DataSet.sampleSeed, but the
+    * driver-local and augmented paths draw other rows for the same key
+    * (see there). No 1.0 cap: with replacement, fraction > 1 is valid
+    * and a batch larger than the split delivers that many draws. */
+  private def sampledBlocks(minibatchSize: Int, steps: Seq[Int],
+                            training: Boolean)
+      : org.apache.spark.rdd.RDD[(Int, Array[Double])] = {
     val total = if (training) dataset.trainCount else dataset.testCount
     dataset.sampleBlocks(inputCols, training,
       minibatchSize.toDouble / math.max(1L, total),
-      DataSet.sampleSeed(seed, step, training))
+      steps.map(DataSet.sampleSeed(seed, _, training)))
   }
 
   /** One batch evaluation, choosing the cheapest valid path:
@@ -265,7 +282,7 @@ final class Elbo(
     * full DataFrame (augmented). */
   private def batchGrad(step: Int, minibatchSize: Int, training: Boolean,
                         theta: Array[Double], draws: Array[Double])
-      : (Double, Array[Double], Long) = {
+      : (Double, Array[Double], Long) = hoistedGrad(theta, draws) { b =>
     if (useLocal) {
       val rows = if (training) localTrain else localTest
       val idx = if (minibatchSize <= 0 || minibatchSize >= rows.length) null
@@ -274,16 +291,16 @@ final class Elbo(
           graft.data.DataSet.sampleSeed(seed, step, training))
         Array.fill(minibatchSize)(r.nextInt(rows.length))
       }
-      localGrad(rows, idx, theta, draws)
+      localGrad(rows, idx, b)
     } else if (augmentIsDefault) {
       rddGrad(if (minibatchSize <= 0) dataset.blocks(inputCols, training)
-        else sampledBlocks(minibatchSize, step, training), theta, draws)
+        else sampledBlocks(minibatchSize, Seq(step), training).values, b)
     } else {
       val df =
         if (minibatchSize <= 0) { if (training) dataset.train else dataset.test }
         else if (training) dataset.minibatch(minibatchSize, step)
         else dataset.testBatch(minibatchSize, step)
-      rddGrad(dataset.pack(augment(df, step), inputCols), theta, draws)
+      rddGrad(dataset.pack(augment(df, step), inputCols), b)
     }
   }
 
@@ -312,9 +329,11 @@ final class Elbo(
     * any corpus scale — else persisted as cached blocks) and the k
     * sub-steps each draw fresh reparameterization noise against it.
     * On the distributed path this divides the per-step job (a median
-    * of 33–42 ms in the traced perfbench `train` runs of
-    * plans/elbo_blocks/trace_train.log) by k;
-    * statistically it is plain minibatch reuse (same
+    * of 30–33 ms per unfused step in the traced perfbench `train` runs
+    * of plans/elbo_hoist/trace_train.log) by k, and since no batch
+    * depends on θ, one job samples every group of the call that the
+    * collect budget holds: a 10-step call at k = 5 launches one job,
+    * not two. Statistically it is plain minibatch reuse (same
     * estimator, k-fold-correlated batches), standard practice when
     * sampling dominates step cost. */
   def optimize(maxiter: Int, minibatchSize: Int = -1, lr: Double = 0.01,
@@ -418,70 +437,76 @@ final class Elbo(
         println(f"[elbo] iter $it%6d elbo=$lastElbo%.4f")
     }
 
+    // global steps first … first + k − 1, each with its own fresh draw
+    def steps(first: Int, k: Int)(
+        gradAt: (Int, Array[Double]) => (Double, Array[Double], Long)): Unit =
+      (first until first + k).foreach { step =>
+        val draws = freshDraws(step)
+        val (loss, grad, cnt) = gradAt(step, draws)
+        applyStep(loss, grad, cnt, draws, step)
+      }
+
     // fusing only helps where a batch is expensive to produce: the
     // distributed minibatch paths (local data re-indexes for free;
     // full-batch reuses the same persisted RDD every step already)
     val fuse = stepsPerBatch > 1 && !useLocal && minibatchSize > 0
-    var it = 0
-    while (it < maxiter) {
-      if (!fuse) {
-        val g = startStep + it
-        val draws = freshDraws(g)
-        val (loss, grad, cnt) = batchGrad(g, minibatchSize,
-          training = true, theta, draws)
-        applyStep(loss, grad, cnt, draws, g)
-        it += 1
-      } else {
-        // batch groups are aligned to GLOBAL step boundaries (0, k,
-        // 2k, …), and a resumed run entering mid-group re-samples that
-        // group's batch by its group-start seed and runs only the
-        // remaining sub-steps — so optimize(startStep = t) continues
-        // the exact batch/draw schedule of the uninterrupted run for
-        // ANY t, not just multiples of k
-        val globalIt = startStep + it
-        val groupStart = globalIt - (globalIt % stepsPerBatch)
-        val k = math.min(stepsPerBatch - (globalIt % stepsPerBatch),
-          maxiter - it)
-        // a minibatch is memory-bounded BY CONSTRUCTION (the user chose
-        // its size), so collecting it for driver-local sub-steps is
-        // gated on its own fixed budget — NOT on localThreshold, which
-        // governs whether the whole DATASET may live on the driver
-        // (and is 0 when forcing the distributed path for benching)
-        val collectable = augmentIsDefault &&
-          minibatchSize.toLong * math.max(1, inputCols.length) <=
-            Elbo.FusedCollectBudget
-        var rows: Array[Array[Double]] = null
+    if (!fuse) steps(startStep, maxiter) { (step, draws) =>
+      batchGrad(step, minibatchSize, training = true, theta, draws)
+    } else {
+      // this call's batch groups as (group start, first step, sub-steps).
+      // Groups are aligned to GLOBAL step boundaries (0, k, 2k, …), and a
+      // resumed run entering mid-group re-samples that group's batch by
+      // its group-start seed and runs only the remaining sub-steps — so
+      // optimize(startStep = t) continues the exact batch/draw schedule
+      // of the uninterrupted run for ANY t, not just multiples of k
+      val groups = {
+        val gs = Seq.newBuilder[(Int, Int, Int)]
+        var it = 0
+        while (it < maxiter) {
+          val g = startStep + it
+          val k = math.min(stepsPerBatch - g % stepsPerBatch, maxiter - it)
+          gs += ((g - g % stepsPerBatch, g, k))
+          it += k
+        }
+        gs.result()
+      }
+      // a minibatch is memory-bounded BY CONSTRUCTION (the user chose
+      // its size), so collecting it for driver-local sub-steps is gated
+      // on its own fixed budget — NOT on localThreshold, which governs
+      // whether the whole DATASET may live on the driver (and is 0 when
+      // forcing the distributed path for benching)
+      val cells = minibatchSize.toLong * math.max(1, inputCols.length)
+      if (augmentIsDefault && cells <= Elbo.FusedCollectBudget) {
+        // one job samples as many groups as the budget holds; a few
+        // large blocks per group cross to the driver, not one object
+        // per row, and are split there into the rows localGrad walks
+        groups.grouped((Elbo.FusedCollectBudget / cells).toInt).foreach { job =>
+          val got = sampledBlocks(minibatchSize, job.map(_._1),
+            training = true).collect()
+          job.zipWithIndex.foreach { case ((_, first, k), j) =>
+            val rows = DataSet.allRows(got.filter(_._1 == j).map(_._2),
+              inputCols.length)
+            steps(first, k) { (_, draws) =>
+              hoistedGrad(theta, draws)(localGrad(rows, null, _))
+            }
+          }
+        }
+      } else groups.foreach { case (groupStart, first, k) =>
         var rdd: org.apache.spark.rdd.RDD[Array[Double]] = null
         var df: org.apache.spark.sql.DataFrame = null
         if (augmentIsDefault) {
-          val sampled = sampledBlocks(minibatchSize, groupStart,
-            training = true)
-          // a few large blocks cross to the driver, not one object per
-          // row; split there into the rows localGrad walks
-          if (collectable)
-            rows = DataSet.allRows(sampled.collect(), inputCols.length)
-          else {
-            rdd = sampled.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            rdd.count()
-          }
+          rdd = sampledBlocks(minibatchSize, Seq(groupStart), training = true)
+            .values.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          rdd.count()
         } else {
           df = dataset.minibatch(minibatchSize, groupStart)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           df.count()
         }
-        try {
-          var s = 0
-          while (s < k) {
-            val step = startStep + it + s
-            val draws = freshDraws(step)
-            val (loss, grad, cnt) =
-              if (rows != null) localGrad(rows, null, theta, draws)
-              else if (rdd != null) rddGrad(rdd, theta, draws)
-              else rddGrad(dataset.pack(augment(df, step), inputCols),
-                theta, draws)
-            applyStep(loss, grad, cnt, draws, step)
-            s += 1
+        try steps(first, k) { (step, draws) =>
+          hoistedGrad(theta, draws) { b =>
+            if (rdd != null) rddGrad(rdd, b)
+            else rddGrad(dataset.pack(augment(df, step), inputCols), b)
           }
         } finally {
           // release the group's cache even when a sub-step throws —
@@ -490,7 +515,6 @@ final class Elbo(
           if (rdd != null) rdd.unpersist(false)
           if (df != null) df.unpersist(false)
         }
-        it += k
       }
     }
     if (lrSchedule != null) adam.lr = entryLr
@@ -560,10 +584,14 @@ object Elbo {
   /** Default `localThreshold`: 32M cells (256 MB of doubles). */
   val LocalThresholdCells: Long = 32000000L
 
-  /** Max minibatch doubles (rows × input cols ≈ 32 MB) collected to
-    * the driver for fused multi-step groups; larger batches stay a
-    * cached RDD and sub-steps run as jobs. */
+  /** Max minibatch doubles (rows × input cols ≈ 32 MB) one job
+    * collects to the driver for fused multi-step groups: a job samples
+    * as many of a call's groups as fit; a larger batch stays a cached
+    * RDD and its sub-steps run as jobs. */
   val FusedCollectBudget: Long = 4000000L
+
+  /** The row tape's draws: it reads none, they are folded into B. */
+  private val NoDraws: Array[Double] = Array.emptyDoubleArray
 
   /** Default no-op augment marker (identity). Kept as a named object so
     * the engine can detect "no per-step columns" and use the persisted
@@ -587,11 +615,12 @@ object Elbo {
     else { val fresh = new Scratch(tape); scratch.set(fresh); fresh }
   }
 
-  /** A partition's mutable partial Σ (logp, ∇logp, rows): one object,
-    * serialized once per task, instead of a tuple per row. */
-  private[optimize] final class GradAcc(nSlots: Int) extends Serializable {
+  /** A partition's mutable partial Σ (logp, ∂logp/∂B, rows) over `nB`
+    * slot values: one object, serialized once per task, instead of a
+    * tuple per row. */
+  private[optimize] final class GradAcc(nB: Int) extends Serializable {
     var loss = 0.0
-    val grad = new Array[Double](nSlots)
+    val grad = new Array[Double](nB)
     var count = 0L
 
     def merge(o: GradAcc): GradAcc = {

@@ -44,23 +44,37 @@ class DataSetSpec extends AnyFunSuite {
 
   private def sampled(ds: DataSet, cs: Seq[String], training: Boolean,
                       frac: Double, seed: Long) =
-    ds.sampleBlocks(cs, training, frac, seed)
-      .glom().collect().map(_.flatMap(DataSet.rows(_, cs.length))
-        .map(_.toSeq).toSeq).toSeq
+    sampledEach(ds, cs, training, frac, Seq(seed)).head
+
+  /** One `sampleBlocks` call over all `seeds`: each seed's rows, by
+    * partition. */
+  private def sampledEach(ds: DataSet, cs: Seq[String], training: Boolean,
+                          frac: Double, seeds: Seq[Long]) = {
+    val parts = ds.sampleBlocks(cs, training, frac, seeds).glom().collect()
+    seeds.indices.map(j => parts.map(_.filter(_._1 == j)
+      .flatMap(b => DataSet.rows(b._2, cs.length)).map(_.toSeq).toSeq).toSeq)
+  }
 
   private def check(ds: DataSet, cs: Seq[String], training: Boolean,
                     f32: Boolean): Unit = {
     val total = if (training) ds.trainCount else ds.testCount
     // 0.1 and 0.3 take the gap sampler, 0.6 the Poisson draw per row,
     // 1.7 more draws than rows
-    for (frac <- Seq(0.1, 0.3, 0.6, 1.7); seed <- Seq(0L, 1L, 2L, 7919L * 3)) {
-      val want = reference(ds, cs, training, f32, frac, seed)
-      val got = sampled(ds, cs, training, frac, seed)
-      assert(got.length == want.length, "partition count")
-      assert(got == want, s"frac $frac seed $seed (training=$training)")
-      val rows = got.map(_.length).sum
-      assert(math.abs(rows - frac * total) < 6 * math.sqrt(frac * total) + 1,
-        s"$rows rows for frac $frac of $total")
+    val seeds = Seq(0L, 1L, 2L, 7919L * 3)
+    for (frac <- Seq(0.1, 0.3, 0.6, 1.7)) {
+      // all seeds in one call, as a fused Elbo job samples its groups
+      val together = sampledEach(ds, cs, training, frac, seeds)
+      for ((seed, j) <- seeds.zipWithIndex) {
+        val want = reference(ds, cs, training, f32, frac, seed)
+        val got = sampled(ds, cs, training, frac, seed)
+        assert(got.length == want.length, "partition count")
+        assert(got == want, s"frac $frac seed $seed (training=$training)")
+        assert(together(j) == want,
+          s"frac $frac seed $seed, index $j of a multi-seed call")
+        val rows = got.map(_.length).sum
+        assert(math.abs(rows - frac * total) < 6 * math.sqrt(frac * total) + 1,
+          s"$rows rows for frac $frac of $total")
+      }
     }
     val viewed = (if (training) ds.trainVectors(cs) else ds.testVectors(cs))
       .sample(withReplacement = true, 0.25, 5L).collect().map(_.toSeq).toSeq
@@ -80,7 +94,7 @@ class DataSetSpec extends AnyFunSuite {
       check(ds, cols, training = true, f32 = false)
       check(ds, cols, training = false, f32 = false)
       check(ds, Seq("x", "l"), training = true, f32 = false)
-      assert(ds.sampleBlocks(cols, true, 0.0, 1L).count() == 0)
+      assert(ds.sampleBlocks(cols, true, 0.0, Seq(1L, 2L)).count() == 0)
       assert(ds.localTrain(cols).map(_.toSeq).toSeq ==
         ds.train.select(cols.map(col): _*).collect()
           .map(r => cols.indices.map(i => r.get(i) match {
@@ -111,7 +125,7 @@ class DataSetSpec extends AnyFunSuite {
     try {
       assert(ds.localTrain(Nil).length == ds.trainCount)
       assert(ds.trainVectors(Nil).count() == ds.trainCount)
-      val got = ds.sampleBlocks(Nil, true, 0.3, 4L).collect()
+      val got = ds.sampleBlocks(Nil, true, 0.3, Seq(4L)).values.collect()
         .map(DataSet.rows(_, 0).length).sum
       assert(got == ds.trainVectors(Nil)
         .sample(withReplacement = true, 0.3, 4L).count())

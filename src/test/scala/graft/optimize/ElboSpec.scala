@@ -400,6 +400,9 @@ class ElboSpec extends AnyFunSuite {
     out
   }
 
+  private def fromHex(h: String): Double =
+    java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(h, 16))
+
   test("golden θ: 20 fused + 10 unfused forced-distributed steps and 20 " +
     "local steps reproduce the recorded trajectories bit for bit") {
     val dist = goldenTheta(0L, Seq(5 -> 20, 1 -> 10))
@@ -407,33 +410,38 @@ class ElboSpec extends AnyFunSuite {
     val augmented = goldenTheta(0L, Seq(1 -> 10), augmented = true)
     // recorded values: a change to batching, draws or summation order
     // moves them
-    assert(dist == Seq("3fd50f87e78c0faf", "bfed9f979f22b9e4",
+    assert(dist == Seq("3fd50f87e78c0faf", "bfed9f979f22b9e3",
+      "3fe0a526b6f945e8", "bfe7230512e51119", "3fd8ce78289faa91",
+      "bfd97cdd982128bc"), s"distributed θ: $dist")
+    assert(local == Seq("3fd7638c6b287464", "bfe85f72d5e6c83d",
+      "3fd7671cb8bdd2a7", "bfe1bc1d901b6238", "3fe0d9d3bc3396af",
+      "bfd1819bd25fa509"), s"local θ: $local")
+    assert(augmented == Seq("3fd36d9d94632d61", "bfdf8c2ea0cf767a",
+      "3fcf516d5d0526c8", "bfd46791a8bd0002", "3fda9bf7ec382a84",
+      "bfc0f225f942e9ff"), s"augmented θ: $augmented")
+    // the values recorded before the row tape was hoisted: hoisting
+    // changes only the gradient's summation order, so θ stays within
+    // 1e-12 relative of them (it moved by at most 6 ulps)
+    def near(got: Seq[String], was: Seq[String]): Boolean =
+      got.map(fromHex).zip(was.map(fromHex)).forall { case (g, w) =>
+        math.abs(g - w) <= 1e-12 * math.abs(w)
+      }
+    assert(near(dist, Seq("3fd50f87e78c0faf", "bfed9f979f22b9e4",
       "3fe0a526b6f945e9", "bfe7230512e5111a", "3fd8ce78289faa8b",
-      "bfd97cdd982128b9"), s"distributed θ: $dist")
-    assert(local == Seq("3fd7638c6b287462", "bfe85f72d5e6c83c",
+      "bfd97cdd982128b9")), s"distributed θ: $dist")
+    assert(near(local, Seq("3fd7638c6b287462", "bfe85f72d5e6c83c",
       "3fd7671cb8bdd2a7", "bfe1bc1d901b6237", "3fe0d9d3bc3396aa",
-      "bfd1819bd25fa50a"), s"local θ: $local")
-    assert(augmented == Seq("3fd36d9d94632d61", "bfdf8c2ea0cf767f",
+      "bfd1819bd25fa50a")), s"local θ: $local")
+    assert(near(augmented, Seq("3fd36d9d94632d61", "bfdf8c2ea0cf767f",
       "3fcf516d5d0526c7", "bfd46791a8bd0004", "3fda9bf7ec382a84",
-      "bfc0f225f942ea03"), s"augmented θ: $augmented")
+      "bfc0f225f942ea03")), s"augmented θ: $augmented")
   }
 
-  test("forced-distributed training runs one Spark job per fused group " +
-    "and one per unfused step") {
+  /** Spark jobs that `body` submits. Job ids grow in submission order
+    * and the bus delivers events in order, so the jobs between two
+    * marker jobs are the body's. */
+  private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val root = new Module
-    val a = root.add("a", new Variational.Normal(Seq(1)))
-    val b = root.add("b", new Variational.Normal(Seq(1)))
-    val ds = new DataSet(goldenData, seed = 0)
-    val elbo = new Elbo(root, ds, Seq("x", "y"), ctx => ExprFns.gaussian(
-      ctx.in("y"), ctx.sample1(a) + ctx.sample1(b) * ctx.in("x"),
-      graft.autodiff.Expr.c(1.0)), seed = 0, localThreshold = 0L)
-    val adam = new Adam(elbo.nSlots, lr = 0.05)
-    // warm: the split counts and the projection cache are built here
-    elbo.optimize(5, minibatchSize = 5000, adamState = adam, stepsPerBatch = 5)
-    elbo.optimize(1, minibatchSize = 5000, adamState = adam, startStep = 5)
-    // job ids grow in submission order and the bus delivers events in
-    // order, so the jobs between two marker jobs are the optimizer's
     val ids = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -448,22 +456,56 @@ class ElboSpec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      marker("elbo-fused")
-      elbo.optimize(20, minibatchSize = 5000, adamState = adam,
-        startStep = 10, stepsPerBatch = 5)
-      marker("elbo-unfused")
-      elbo.optimize(10, minibatchSize = 5000, adamState = adam,
-        startStep = 30)
-      marker("elbo-end")
+      marker("jobs-begin")
+      body
+      marker("jobs-end")
       val deadline = System.nanoTime() + 30e9.toLong
       def seen(name: String) =
         ids.toArray(Array.empty[(Int, String)]).find(_._2 == name).map(_._1)
-      while (seen("elbo-end").isEmpty && System.nanoTime() < deadline)
+      while (seen("jobs-end").isEmpty && System.nanoTime() < deadline)
         Thread.sleep(20)
-      val Seq(f, u, e) = Seq("elbo-fused", "elbo-unfused", "elbo-end")
-        .map(n => seen(n).get)
-      assert(u - f - 1 == 4, s"${u - f - 1} jobs for 4 fused groups")
-      assert(e - u - 1 == 10, s"${e - u - 1} jobs for 10 unfused steps")
-    } finally { sc.removeSparkListener(listener); ds.unpersist() }
+      seen("jobs-end").get - seen("jobs-begin").get - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("forced-distributed training samples a call's fused groups in " +
+    "ceil(groups / fit) Spark jobs and runs one job per unfused step") {
+    val root = new Module
+    val a = root.add("a", new Variational.Normal(Seq(1)))
+    val b = root.add("b", new Variational.Normal(Seq(1)))
+    // 30 extra columns the model does not read: 32 doubles per row
+    val wide = goldenData.select(col("x") +: col("y") +:
+      (0 until 30).map(j => (col("x") * j).as(s"w$j")): _*)
+    val ds = new DataSet(wide, seed = 0)
+    def elbo(cols: Seq[String]) = new Elbo(root, ds, cols,
+      ctx => ExprFns.gaussian(ctx.in("y"),
+        ctx.sample1(a) + ctx.sample1(b) * ctx.in("x"),
+        graft.autodiff.Expr.c(1.0)), seed = 0, localThreshold = 0L)
+    try {
+      val narrow = elbo(Seq("x", "y"))
+      val adam = new Adam(narrow.nSlots, lr = 0.05)
+      // warm: the split counts and the projection cache are built here
+      narrow.optimize(5, minibatchSize = 5000, adamState = adam, stepsPerBatch = 5)
+      narrow.optimize(1, minibatchSize = 5000, adamState = adam, startStep = 5)
+      val fused = jobsOf(narrow.optimize(20, minibatchSize = 5000,
+        adamState = adam, startStep = 10, stepsPerBatch = 5))
+      assert(fused == 1, s"$fused jobs for 4 fused groups")
+      val unfused = jobsOf(narrow.optimize(10, minibatchSize = 5000,
+        adamState = adam, startStep = 30))
+      assert(unfused == 10, s"$unfused jobs for 10 unfused steps")
+
+      // batches of 32 · 50,000 cells: the collect budget fits 2 groups
+      // per job, so 5 groups take 3 jobs
+      val cols = wide.columns.toSeq
+      val batch = 50000
+      val fit = (Elbo.FusedCollectBudget / (batch.toLong * cols.length)).toInt
+      assert(fit == 2)
+      val full = elbo(cols)
+      val adam2 = new Adam(full.nSlots, lr = 0.05)
+      full.optimize(1, minibatchSize = batch, adamState = adam2) // warm
+      val jobs = jobsOf(full.optimize(10, minibatchSize = batch,
+        adamState = adam2, startStep = 2, stepsPerBatch = 2))
+      assert(jobs == (5 + fit - 1) / fit, s"$jobs jobs for 5 fused groups")
+    } finally ds.unpersist()
   }
 }
